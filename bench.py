@@ -1562,11 +1562,12 @@ def _scale_benches(
         try:
             from urllib.parse import urlparse as _urlparse
 
+            from gis_etl_spark.io import forget
+
             names = SIM.ivfpq_index_tables(SF_DIR)
             for t_ in names.values():
                 spark.sql(f"DROP TABLE IF EXISTS {t_}")
-            SIM._KMEANS_CACHE.clear()
-            SIM._IVFPQ_CACHE.clear()
+            forget("kmeans", "ivfpq")
             t0 = time.time()
             SIM.build_ivfpq_index(spark, SF_DIR)
             artifacts["ann_index_build_ms"] = int(

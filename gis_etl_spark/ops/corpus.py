@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gis_etl_spark.io import fingerprint
 from gis_etl_spark.ops.dedup import (
     PREP_QUALITY_T,
     _docs,
@@ -145,18 +146,9 @@ def _flagged_docs(
 
 def curation_flags_table(docs_path: str | None = None) -> str:
     """Catalog name of the materialized per-doc flags table, keyed by
-    the corpus file fingerprint (mtime+size — a regenerated corpus gets
+    the corpus fingerprint (io.fingerprint — a regenerated corpus gets
     a new table; same contract as the ANN index artifacts)."""
-    import os
-    from hashlib import md5
-
-    path = docs_path or ensure_documents_aug()
-    try:
-        st = os.stat(path)
-        key = (path, st.st_mtime_ns, st.st_size)
-    except OSError:
-        key = (path,)
-    return f"curation_flags_{md5(repr(key).encode()).hexdigest()[:10]}"
+    return f"curation_flags_{fingerprint(docs_path or ensure_documents_aug())}"
 
 
 def materialize_curation_flags(

@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gis_etl_spark.fixtures import ensure_documents_aug
+from gis_etl_spark.io import fingerprint, memo
 from gis_etl_spark.ops.text import h60_sql
 
 P31 = 2**31 - 1
@@ -674,7 +675,7 @@ def dedup_snapshot_tables(
     docs_path: str | None = None, scope: str = "incsplit"
 ) -> dict[str, str]:
     """Catalog names of the PERSISTED snapshot-side dedup artifacts,
-    keyed by the corpus file fingerprint (mtime+size — the
+    keyed by the corpus fingerprint (io.fingerprint — the
     ivfpq/bm25/flags table contract) and the snapshot SCOPE
     ('incsplit' = the contract fixture's history side, doc_id %
     {INC_MOD} != {INC_NEW_REM}; 'full' = the whole corpus is history —
@@ -684,16 +685,7 @@ def dedup_snapshot_tables(
     and component labels. These are the tables the incremental probes,
     the displacement-risk monitor, and the targeted re-derive read in
     production instead of re-deriving history per increment."""
-    import os
-    from hashlib import md5
-
-    path = docs_path or ensure_documents_aug()
-    try:
-        st = os.stat(path)
-        key = (path, st.st_mtime_ns, st.st_size, scope)
-    except OSError:
-        key = (path, scope)
-    fp = md5(repr(key).encode()).hexdigest()[:10]
+    fp = f"{fingerprint(docs_path or ensure_documents_aug())}_{scope}"
     return {
         "fingerprints": f"dedup_snap_fp_{fp}",
         "bands": f"dedup_snap_bands_{fp}",
@@ -1513,84 +1505,45 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Session memo for the verified near-dup pair EDGE set — the pair
-# graph is the shared upstream of components/keepers/cluster-stats,
-# and in production it is a materialized table consumed by every
-# policy pass, not recomputed per consumer. Keyed by the augmented
-# corpus fingerprint (path+mtime+size, the similarity-cache contract);
-# the value is a localCheckpointed frame, so the whole MinHash chain
-# runs once per session per corpus.
-_PAIR_EDGE_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _verified_pair_edges(
     spark: SparkSession, sf_dir: str, docs_path: str | None = None
 ) -> DataFrame:
-    import os as _os
-
+    """The verified near-dup pair EDGE set (doc_a, doc_b), memoized per
+    session per corpus fingerprint and localCheckpointed — the pair
+    graph is the shared upstream of components/keepers/cluster-stats,
+    and in production it is a materialized table consumed by every
+    policy pass, not recomputed per consumer, so the whole MinHash
+    chain runs once per session per corpus."""
     path = docs_path or ensure_documents_aug()
-    # Keyed by (corpus fingerprint, applicationId): a localCheckpoint
-    # belongs to ITS SparkContext — after a stop()/recreate cycle in
-    # the same process (sequential CLI runs, test session churn) a
-    # fingerprint-only key would hand back a frame whose checkpoint
-    # blocks died with the old context (ADVICE r13). A new app id
-    # misses and rebuilds; stale entries for dead contexts are evicted
-    # so their checkpoint storage isn't pinned by the module global.
-    app_id = spark.sparkContext.applicationId
-    try:
-        st = _os.stat(path)
-        key = (path, st.st_mtime_ns, st.st_size, app_id)
-    except OSError:
-        key = (path, app_id)
-    cached = _PAIR_EDGE_CACHE.get(key)
-    if cached is None:
-        for k in [k for k in _PAIR_EDGE_CACHE if k[-1] != app_id]:
-            del _PAIR_EDGE_CACHE[k]
-        cached = (
-            dedup_minhash_pairs(spark, sf_dir, docs_path)
-            .select("doc_a", "doc_b")
-            .localCheckpoint()
-        )
-        _PAIR_EDGE_CACHE[key] = cached
-    return cached
-
-
-# Session memo for the COMPONENT LABELS over the verified pair edges —
-# the _PAIR_EDGE_CACHE discipline one level up (r18, guide §1.2 step 1:
-# don't recompute what a consumer chain shares): the label fixpoint is
-# a driver loop of ~3 jobs per round, and five consumers (keeper
-# policy, cluster stats, component assembly, the funnel's flags, the
-# corpus writer) each re-ran it per call. Same keying/eviction as the
-# edge cache; the stored snapshot's `members` table is the durable,
-# cross-process form of the same artifact.
-_COMPONENT_LABEL_CACHE: dict[tuple, DataFrame] = {}
+    return memo(
+        spark,
+        "dedup_pair_edges",
+        [path],
+        (),
+        lambda: dedup_minhash_pairs(spark, sf_dir, path)
+        .select("doc_a", "doc_b")
+        .localCheckpoint(),
+    )
 
 
 def _component_labels(
     spark: SparkSession, sf_dir: str, docs_path: str | None = None
 ) -> DataFrame:
     """(doc_id, component) over _verified_pair_edges, fixpoint run once
-    per session per corpus fingerprint and localCheckpointed."""
-    import os as _os
-
+    per session per corpus fingerprint: the label fixpoint runs ~3
+    Spark jobs per round, and five consumers (keeper policy,
+    cluster stats, component assembly, the funnel's flags, the corpus
+    writer) share it. label_components' result is already
+    localCheckpointed at loop exit. The stored snapshot's `members`
+    table is the durable, cross-process form of the same artifact."""
     path = docs_path or ensure_documents_aug()
-    app_id = spark.sparkContext.applicationId
-    try:
-        st = _os.stat(path)
-        key = (path, st.st_mtime_ns, st.st_size, app_id)
-    except OSError:
-        key = (path, app_id)
-    cached = _COMPONENT_LABEL_CACHE.get(key)
-    if cached is None:
-        for k in [k for k in _COMPONENT_LABEL_CACHE if k[-1] != app_id]:
-            del _COMPONENT_LABEL_CACHE[k]
-        # label_components' result is already localCheckpointed at
-        # loop exit — no second checkpoint needed
-        cached = label_components(
-            _verified_pair_edges(spark, sf_dir, docs_path)
-        )
-        _COMPONENT_LABEL_CACHE[key] = cached
-    return cached
+    return memo(
+        spark,
+        "dedup_component_labels",
+        [path],
+        (),
+        lambda: label_components(_verified_pair_edges(spark, sf_dir, path)),
+    )
 
 
 def dedup_canonical_keepers(

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gis_etl_spark.io import read_table
+from gis_etl_spark.io import memo, read_table, table_path
 
 PR_SCALE = 10**12
 PR_ITERS = 3
@@ -60,40 +60,26 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionAll(pairs.select(F.col("s").alias("src"), F.col("c").alias("dst")))
 
 
-_EDGE_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
-def _graph_key(spark: SparkSession, sf_dir: str) -> tuple:
-    import os
-
-    # applicationId, not id(spark): after a session is stopped and
-    # garbage-collected, CPython can reuse the same id for a new
-    # session, which would hand back DataFrames bound to a dead JVM.
-    parts = [spark.sparkContext.applicationId]
-    for t in ("orders", "lineitem"):
-        st = os.stat(os.path.join(sf_dir, f"{t}.parquet"))
-        parts += [st.st_mtime_ns, st.st_size]
-    return tuple(parts)
-
-
 def _edges_deg_cached(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    """Persisted (edges, degrees), memoized per (session, corpus
-    fingerprint) — one cache entry per dataset, not per builder call."""
-    key = _graph_key(spark, sf_dir)
-    if key not in _EDGE_CACHE:
-        # r19: the unionAll doubles the distinct's partition count, so
-        # the persisted edge frame held 2×shuffle.partitions slivers
-        # and every iteration's broadcast-join stage ran 64 tiny tasks
+    """Persisted (edges, degrees), memoized per (session, input
+    fingerprint) — one entry per dataset, not per builder call."""
+
+    def build() -> tuple[DataFrame, DataFrame]:
+        # the unionAll doubles the distinct's partition count, so the
+        # persisted edge frame held 2×shuffle.partitions slivers and
+        # every iteration's broadcast-join stage ran 64 tiny tasks
         # (~200 KB each, half the task time pure launch/wait overhead).
         # Narrow-coalesce to cluster width before persisting — no
         # shuffle, same rows, per-iteration stages at defaultParallelism.
         para = spark.sparkContext.defaultParallelism
         edges = _edges(spark, sf_dir).coalesce(para).persist()
         deg = edges.groupBy("src").agg(F.count("*").alias("deg")).persist()
-        _EDGE_CACHE[key] = (edges, deg)
-    return _EDGE_CACHE[key]
+        return edges, deg
+
+    inputs = [table_path(sf_dir, t) for t in ("orders", "lineitem")]
+    return memo(spark, "trade_edges", inputs, (), build)
 
 
 def pagerank_reference(
@@ -276,31 +262,30 @@ def copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TRI_EDGE_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _tri_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Persisted sparsified edge set, memoized per (session, corpus) —
-    the census consumes `edges` from three places (degrees + both
-    orientation joins), and without a persist each consumer re-executes
-    the orders⋈lineitem projection + top-m. Measured: steady-state
-    1.1 s at BOTH sf0.01 and sf0.1 with the persist (the remaining
-    cold-gate cost is first-materialization of the co-purchase
-    subtree, paid once). Same memo/fingerprint pattern as
-    _edges_deg_cached."""
+    """Persisted sparsified edge set, memoized per (session, input
+    fingerprint) — the census consumes `edges` from three places
+    (degrees + both orientation joins), and without a persist each
+    consumer re-executes the orders⋈lineitem projection + top-m.
+    Measured: steady-state 1.1 s at BOTH sf0.01 and sf0.1 with the
+    persist (the remaining cold-gate cost is first-materialization of
+    the co-purchase subtree, paid once)."""
     from gis_etl_spark.ops.relational import supplier_copurchase_pairs
 
-    key = _graph_key(spark, sf_dir)
-    if key not in _TRI_EDGE_CACHE:
+    def build() -> DataFrame:
         n_sup = read_table(spark, sf_dir, "supplier").count()
-        pairs = supplier_copurchase_pairs(spark, sf_dir)
-        _TRI_EDGE_CACHE[key] = (
-            pairs.orderBy(F.desc("n_shared"), "sa", "sb")
+        return (
+            supplier_copurchase_pairs(spark, sf_dir)
+            .orderBy(F.desc("n_shared"), "sa", "sb")
             .limit(TRI_EDGE_FACTOR * n_sup)
             .select("sa", "sb")
             .persist()
         )
-    return _TRI_EDGE_CACHE[key]
+
+    inputs = [
+        table_path(sf_dir, t) for t in ("orders", "lineitem", "supplier")
+    ]
+    return memo(spark, "tri_edges", inputs, (), build)
 
 
 def triangle_census(edges: DataFrame) -> DataFrame:

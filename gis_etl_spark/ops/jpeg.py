@@ -97,6 +97,7 @@ def ycbcr_to_rgb_int(y: np.ndarray, cb: np.ndarray, cr: np.ndarray):
     ).astype(np.uint8)
 
 
+# Not an io.memo: executor-side memo of a pure function of DHT bytes (no input file).
 _HUFF_LUT_CACHE: dict[bytes, tuple[list[int], list[int]]] = {}
 
 

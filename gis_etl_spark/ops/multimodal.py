@@ -63,6 +63,7 @@ from pyspark.sql.types import (
 )
 
 from gis_etl_spark.fixtures import MEDIA_MAGIC, ensure_media
+from gis_etl_spark.io import memo
 from gis_etl_spark.ops.jpeg import decode_jpeg, jpeg_header
 
 JPEG_SIG = b"\xff\xd8"
@@ -559,9 +560,6 @@ def multimodal_ahash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 HAM_T = 3  # pigeonhole-exact: ≤3 flipped bits across 4 bands ⇒ ≥1 band intact
 
-_AHASH_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _ahashes_cached(spark: SparkSession) -> DataFrame:
     """Persisted (media_id, ahash) frame (8 bytes/image), memoized per
     (session, fixture fingerprint): both sides of the band self-join
@@ -570,24 +568,12 @@ def _ahashes_cached(spark: SparkSession) -> DataFrame:
     InMemoryTableScans to keep it one decode). Memoization — not a
     per-call persist — because the gate rebuilds the plan repeatedly
     and each fresh persist would leak a cache entry."""
-    import os
 
-    path = ensure_media()
-    st = os.stat(path)
-    # applicationId, not id(spark): a GC'd session's id can be reused
-    # by a new session, resurrecting DataFrames bound to a dead JVM.
-    key = (
-        spark.sparkContext.applicationId,
-        path,
-        st.st_mtime_ns,
-        st.st_size,
-    )
-    if key not in _AHASH_CACHE:
+    def build() -> DataFrame:
         m = _media(spark).filter(F.col("kind") == "image")
-        _AHASH_CACHE[key] = (
-            image_ahashes(m).select("media_id", "ahash").persist()
-        )
-    return _AHASH_CACHE[key]
+        return image_ahashes(m).select("media_id", "ahash").persist()
+
+    return memo(spark, "media_ahash", [ensure_media()], (), build)
 
 
 def multimodal_ahash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

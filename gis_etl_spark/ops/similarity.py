@@ -32,7 +32,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gis_etl_spark.io import read_table
+from gis_etl_spark.io import fingerprint, memo, read_table, table_path
 from gis_etl_spark.ops.text import EMB_DEDUP_T, h60_sql
 
 TOPK = 5
@@ -611,44 +611,27 @@ def _verify_pairs_exact(
     )
 
 
-# corpus-matrix / row-count cache for the verify stage, keyed by
-# (sf_dir, dataset fingerprint): the collect is deterministic for a
-# given dataset *state*, and the gate/bench call each builder
-# repeatedly. The fingerprint (mtime_ns + size of embeddings.parquet)
-# invalidates the entry if the dataset is regenerated at the same path
-# within one process (ADVICE r3).
-_CORPUS_CACHE: dict[tuple, tuple[np.ndarray, np.ndarray]] = {}
-_CORPUS_ROWS_CACHE: dict[tuple, int] = {}
-
-
-def _corpus_key(sf_dir: str) -> tuple:
-    import os
-
-    try:
-        st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-        return (sf_dir, st.st_mtime_ns, st.st_size)
-    except OSError:
-        return (sf_dir,)
-
-
+# corpus-matrix / row-count memos for the verify stage: the collect is
+# deterministic for a given dataset state, and the gate/bench call each
+# builder repeatedly. `joined` is documents ⋈ embeddings, so both files
+# key the entry.
 def _corpus_rows(joined: DataFrame, sf_dir: str) -> int:
-    key = _corpus_key(sf_dir)
-    if key not in _CORPUS_ROWS_CACHE:
-        _CORPUS_ROWS_CACHE[key] = joined.count()
-    return _CORPUS_ROWS_CACHE[key]
+    inputs = [table_path(sf_dir, t) for t in ("documents", "embeddings")]
+    return memo(joined.sparkSession, "corpus_rows", inputs, (), joined.count)
 
 
 def _corpus_matrix(
     joined: DataFrame, sf_dir: str
 ) -> tuple[np.ndarray, np.ndarray]:
-    key = _corpus_key(sf_dir)
-    if key not in _CORPUS_CACHE:
+    def build() -> tuple[np.ndarray, np.ndarray]:
         pdf = joined.select("vec_id", "v").toPandas().sort_values("vec_id")
-        _CORPUS_CACHE[key] = (
+        return (
             pdf["vec_id"].to_numpy(dtype=np.int64),
             np.array(pdf["v"].tolist(), dtype="f8"),
         )
-    return _CORPUS_CACHE[key]
+
+    inputs = [table_path(sf_dir, t) for t in ("documents", "embeddings")]
+    return memo(joined.sparkSession, "corpus_matrix", inputs, (), build)
 
 
 def _cos_by_id_arrow(ids: np.ndarray, V: np.ndarray):
@@ -1089,7 +1072,6 @@ def oracle_sqls() -> dict[str, str]:
 K_KMEANS = 8
 KMEANS_ITERS = 3
 KMEANS_DP = 6  # centroid components rounded per iteration (see below)
-_KMEANS_CACHE: dict[tuple, list[list[float]]] = {}
 
 
 def kmeans_reference(
@@ -1645,7 +1627,6 @@ PQ_DSUB = 8     # dims per subspace (64 / PQ_M)
 PQ_KSUB = 8     # centroids per subspace (3-bit codes)
 PQ_ITERS = 2    # Lloyd iterations per subspace
 PQ_DP = 9       # partial-d2 fixed-point decimals (exact int64 sums)
-_PQ_CACHE: dict[tuple, list[list[list[float]]]] = {}
 
 
 def pq_fit(emb: DataFrame) -> list[list[list[float]]]:
@@ -1669,16 +1650,10 @@ def pq_fit(emb: DataFrame) -> list[list[list[float]]]:
 
 
 def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
-    # keyed by dataset fingerprint (mtime+size), not bare path — a
-    # corpus regenerated at the same path must retrain, same contract
-    # as _corpus_matrix. NOTE builder-time side effect: building a PQ
-    # query plan triggers the (memoized) training Spark jobs.
-    key = _corpus_key(sf_dir)
-    cbs = _PQ_CACHE.get(key)
-    if cbs is None:
-        cbs = pq_fit(_emb(spark, sf_dir))
-        _PQ_CACHE[key] = cbs
-    return cbs
+    # NOTE builder-time side effect: building a PQ query plan triggers
+    # the (memoized) training Spark jobs.
+    inputs = [table_path(sf_dir, "embeddings")]
+    return memo(spark, "pq", inputs, (), lambda: pq_fit(_emb(spark, sf_dir)))
 
 
 def pq_codes_col(cbs: list[list[list[float]]]) -> Column:
@@ -1989,22 +1964,16 @@ def pq_rerank_oracle_sql() -> str:
 # less quantization error than raw-vector PQ.
 # ---------------------------------------------------------------------------
 
-_IVFPQ_CACHE: dict[tuple, list[list[list[float]]]] = {}
-
-
 def _coarse_codebook(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     """THE trained coarse quantizer accessor — distributed Lloyd,
-    memoized per dataset fingerprint (mtime+size: a regenerated corpus
-    must retrain; the gates invoke consumers repeatedly, 3 Spark
-    actions per fit). Single shared implementation for IVF retrieval,
-    SemDeDup, IVFPQ, the drift monitor, and its streaming twin (r14:
-    the per-consumer inline memo blocks collapsed onto this)."""
-    key = _corpus_key(sf_dir)
-    cents = _KMEANS_CACHE.get(key)
-    if cents is None:
-        cents = kmeans_fit(_emb(spark, sf_dir))
-        _KMEANS_CACHE[key] = cents
-    return cents
+    memoized per dataset fingerprint (a regenerated corpus must
+    retrain; the gates invoke consumers repeatedly, 3 Spark actions per
+    fit). Single shared implementation for IVF retrieval, SemDeDup,
+    IVFPQ, the drift monitor, and its streaming twin."""
+    inputs = [table_path(sf_dir, "embeddings")]
+    return memo(
+        spark, "kmeans", inputs, (), lambda: kmeans_fit(_emb(spark, sf_dir))
+    )
 
 
 def _residuals(emb: DataFrame, cents: list[list[float]]) -> DataFrame:
@@ -2030,13 +1999,12 @@ def _ivfpq_codebooks(
     spark: SparkSession, sf_dir: str, res: DataFrame
 ) -> list[list[list[float]]]:
     """Residual PQ codebooks for the IVFPQ chain, memoized per corpus
-    fingerprint (training is deterministic, see pq_fit)."""
-    key = (*_corpus_key(sf_dir), "ivfpq")
-    cbs = _IVFPQ_CACHE.get(key)
-    if cbs is None:
-        cbs = pq_fit(res.select("vec_id", "v"))
-        _IVFPQ_CACHE[key] = cbs
-    return cbs
+    fingerprint (training is deterministic, see pq_fit). `res` derives
+    from embeddings alone (_residuals of _emb)."""
+    inputs = [table_path(sf_dir, "embeddings")]
+    return memo(
+        spark, "ivfpq", inputs, (), lambda: pq_fit(res.select("vec_id", "v"))
+    )
 
 
 def _ivfpq_adc_units(
@@ -2243,11 +2211,9 @@ IVFPQ_INDEX_BUCKETS = 8
 
 def ivfpq_index_tables(sf_dir: str) -> dict[str, str]:
     """Catalog names of the persisted IVFPQ index artifacts, keyed by
-    the corpus fingerprint (mtime+size — a regenerated corpus gets new
-    tables, same contract as the training caches)."""
-    from hashlib import md5
-
-    fp = md5(repr(_corpus_key(sf_dir)).encode()).hexdigest()[:10]
+    the corpus fingerprint (io.fingerprint — a regenerated corpus gets
+    new tables, same contract as the training memos)."""
+    fp = fingerprint(table_path(sf_dir, "embeddings"))
     return {
         "coarse": f"ann_ivfpq_coarse_{fp}",
         "codebooks": f"ann_ivfpq_codebooks_{fp}",

@@ -22,7 +22,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gis_etl_spark.io import read_table, read_table_spread
+from gis_etl_spark.io import (
+    fingerprint,
+    memo,
+    read_table,
+    read_table_spread,
+    table_path,
+)
 
 # small marker-word sets per language; with the driver's synthetic
 # shared-vocabulary corpus these exercise the operator (argmax over
@@ -986,18 +992,10 @@ BM25_INDEX_BUCKETS = 8
 
 def bm25_index_tables(sf_dir: str) -> dict[str, str]:
     """Catalog names of the persisted BM25 serving artifacts, keyed by
-    the documents-table fingerprint (mtime+size — a regenerated corpus
-    gets new tables; the ivfpq_index_tables contract applied to
+    the documents-table fingerprint (io.fingerprint — a regenerated
+    corpus gets new tables; the ivfpq_index_tables contract applied to
     text)."""
-    import os
-    from hashlib import md5
-
-    try:
-        st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-        key = (sf_dir, st.st_mtime_ns, st.st_size)
-    except OSError:
-        key = (sf_dir,)
-    fp = md5(repr(key).encode()).hexdigest()[:10]
+    fp = fingerprint(table_path(sf_dir, "documents"))
     return {
         "postings": f"bm25_postings_{fp}",
         "stats": f"bm25_stats_{fp}",
@@ -1294,15 +1292,17 @@ def bm25_topk_after_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the delta-candidate force-inclusion serves — not just the
     plumbing."""
     names = build_bm25_index(spark, sf_dir)
-    key = names["postings"]  # fingerprint-derived
-    if key not in _DELTA_PQ_CACHE:
+
+    def build() -> str:
         # materialize the increment's postings ONCE per corpus
         # fingerprint — exactly what append_to_bm25_index does to the
         # catalog, here to a scratch path so the shared tables stay
         # unmutated. Without this, each pruning branch re-derives the
         # delta explode subtree (measured 5.9 s vs 2.3 s at sf0.1).
-        import os as _os
-        import tempfile as _tempfile
+        import atexit
+        import os
+        import shutil
+        import tempfile
 
         docs = read_table(spark, sf_dir, "documents").select(
             "doc_id", "text"
@@ -1310,33 +1310,25 @@ def bm25_topk_after_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         delta_docs = docs.filter(
             F.col("doc_id") % BM25_DRIFT_MOD == 0
         ).select((F.col("doc_id") + 5_000_000).alias("doc_id"), "text")
-        # per-process unique scratch dir (ADVICE r15: a deterministic
-        # gettempdir() path is clobber-able by concurrent processes on
-        # the same corpus and pre-creatable on multi-user hosts);
-        # removed at interpreter exit (ADVICE r16: repeated bench runs
-        # on a long-lived host would otherwise each leak a full
-        # delta-postings parquet copy) — exit, not a finally here,
-        # because later calls in THIS process re-read the cached path.
-        import atexit as _atexit
-        import shutil as _shutil
-
-        scratch = _tempfile.mkdtemp(prefix="bm25_delta_")
-        _atexit.register(_shutil.rmtree, scratch, ignore_errors=True)
-        path = _os.path.join(scratch, key)
+        # per-process unique scratch dir (a deterministic gettempdir()
+        # path is clobber-able by concurrent processes on the same
+        # corpus and pre-creatable on multi-user hosts); removed at
+        # interpreter exit, not in a finally here, because later calls
+        # in THIS session re-read the memoized path.
+        scratch = tempfile.mkdtemp(prefix="bm25_delta_")
+        atexit.register(shutil.rmtree, scratch, ignore_errors=True)
+        path = os.path.join(scratch, names["postings"])
         _bm25_delta_postings(spark, names, delta_docs).write.mode(
             "overwrite"
         ).parquet(path)
-        _DELTA_PQ_CACHE[key] = path
-    delta = spark.read.parquet(_DELTA_PQ_CACHE[key])
+        return path
+
+    inputs = [table_path(sf_dir, "documents")]
+    delta = spark.read.parquet(memo(spark, "bm25_delta", inputs, (), build))
     return _bm25_serve_from(
         spark.table(names["postings"]).unionByName(delta),
         spark.table(names["stats"]),
     )
-
-
-# scratch-materialized delta postings per corpus fingerprint (see
-# bm25_topk_after_append)
-_DELTA_PQ_CACHE: dict[str, str] = {}
 
 
 def bm25_topk_after_append_sql() -> str:
@@ -2836,17 +2828,6 @@ ORDER BY t.doc_id
 
 
 BPE_MERGES = 12  # learned merge operations (unrolled in the oracle SQL)
-_BPE_CACHE: dict[tuple, list[tuple[int, str, int]]] = {}
-
-
-def _docs_fingerprint(sf_dir: str) -> tuple:
-    import os
-
-    try:
-        st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-        return (sf_dir, st.st_mtime_ns, st.st_size)
-    except OSError:
-        return (sf_dir,)
 
 
 def _bpe_word_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2918,27 +2899,27 @@ def bpe_fit(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, int]]:
     reaches the driver (the argmax, ties → lexicographically smaller
     pair); the word-frequency table never leaves the cluster. At
     scale, persist the freq frame between iterations; at fixture
-    scale the re-scan is cheaper than the cache bookkeeping."""
-    key = _docs_fingerprint(sf_dir)
-    cached = _BPE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    freq = _bpe_word_freq(spark, sf_dir)
-    merges: list[tuple[int, str, int]] = []
-    for rank in range(1, BPE_MERGES + 1):
-        best = (
-            _bpe_pair_counts(freq)
-            .orderBy(F.desc("cnt"), F.asc("pr"))
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        pr, cnt = best[0]["pr"], int(best[0]["cnt"])
-        merges.append((rank, pr, cnt))
-        freq = _bpe_apply_merge(freq, pr)
-    _BPE_CACHE[key] = merges
-    return merges
+    scale the re-scan is cheaper than the cache bookkeeping. Memoized
+    per session per documents fingerprint."""
+
+    def build() -> list[tuple[int, str, int]]:
+        freq = _bpe_word_freq(spark, sf_dir)
+        merges: list[tuple[int, str, int]] = []
+        for rank in range(1, BPE_MERGES + 1):
+            best = (
+                _bpe_pair_counts(freq)
+                .orderBy(F.desc("cnt"), F.asc("pr"))
+                .limit(1)
+                .collect()
+            )
+            if not best:
+                break
+            pr, cnt = best[0]["pr"], int(best[0]["cnt"])
+            merges.append((rank, pr, cnt))
+            freq = _bpe_apply_merge(freq, pr)
+        return merges
+
+    return memo(spark, "bpe_merges", [table_path(sf_dir, "documents")], (), build)
 
 
 def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:

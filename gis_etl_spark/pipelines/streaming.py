@@ -413,6 +413,7 @@ def streaming_interval_enrich(
 # builder call — so builders register them here and long-lived
 # sessions (bench suite, test modules) drop them once the query has
 # drained, instead of accumulating one cached snapshot per invocation.
+# Not an io.memo: a registry of frames to unpersist, never looked up by key.
 _SNAPSHOT_CACHES: list[DataFrame] = []
 
 
