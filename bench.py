@@ -1779,9 +1779,11 @@ def _scale_benches(
     return out
 
 
-def _prior_round_timings() -> dict[str, float]:
+def _prior_round_timings() -> tuple[dict[str, float], tuple[str, ...]]:
     """Per-query timings from the latest recorded driver round
-    (BENCH_r{N}.json), used as the noise reference: an entry whose
+    (BENCH_r{N}.json), gap-filled from the local record, plus the names
+    the driver line itself reported (the final line keeps those first).
+    The timings are the noise reference: an entry whose
     fresh value exceeds 1.3x its prior-round value is re-measured
     before recording (VERDICT r5 item 3 / r7 item 4 — per-entry
     min-of-two within ONE pass does not remove suite-level host
@@ -1807,6 +1809,7 @@ def _prior_round_timings() -> dict[str, float]:
                 break
         except (OSError, ValueError):
             continue
+    driver_names = tuple(out)
     # r19 (measurement-bug fix, documented in OPTIMIZATION_r19.md):
     # the driver's recorded line keeps only the ~57 slowest entries,
     # so 70+ queries had NO prior and an arbitrary in-suite spike on
@@ -1825,14 +1828,14 @@ def _prior_round_timings() -> dict[str, float]:
             out.setdefault(k, v)
     except (OSError, ValueError):
         pass
-    return out
+    return out, driver_names
 
 
 def main() -> None:
     # snapshot the noise-gate priors BEFORE any section runs:
     # _flush_partial rewrites BENCH_local_latest.json incrementally,
     # so reading it later would compare this run against itself
-    prior = _prior_round_timings()
+    prior, prior_names = _prior_round_timings()
 
     spark = get_spark("gis-etl-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -2028,7 +2031,7 @@ def main() -> None:
     }
     line = compact_final_line(
         timings, sections, result["sf"], ERRORS,
-        prior_names=tuple(prior),
+        prior_names=prior_names,
     )
     assert len(line) <= FINAL_LINE_BUDGET, len(line)
     print(line)

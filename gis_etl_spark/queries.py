@@ -1242,187 +1242,6 @@ REGISTRY.update(
     }
 )
 
-# ---------------------------------------------------------------------------
-# Registry ordering: the round-1 driver gate scored only the FIRST 50
-# dict-order entries (CORRECTNESS_r01.json), leaving the joins/text/
-# dedup/similarity/multimodal packs and 17 geo queries without a driver
-# row. Rotate the never-scored entries to the front (names and builders
-# unchanged) so they fall inside the gate's scoring window; the round-1
-# greens follow behind and get re-scored as capacity allows.
-# ---------------------------------------------------------------------------
-
-_R1_SCORED = frozenset({
-    "q2_top_acctbal_per_nation", "q4_order_priority", "q7_volume_shipping",
-    "q8_market_share", "q9_profit_by_nation_year", "q15_top_supplier",
-    "q19_disjunctive_revenue", "q22_idle_customers", "q6_forecast_revenue",
-    "q14_promo_revenue", "price_percentiles", "q18_large_orders",
-    "pivot_status_by_flag", "cube_orders", "orders_by_year_month",
-    "source_id_extract", "q1_pricing_summary", "q3_shipping_priority",
-    "q5_local_supplier_volume", "q10_returned_items", "count_lineitem",
-    "group_count_order_priority", "count_distinct_customers",
-    "minmax_orders", "orders_top15_by_price", "filter_range_events",
-    "customers_without_orders", "suppliers_with_shipments",
-    "union_all_names", "custkeys_without_recent_orders",
-    "top3_orders_per_customer", "running_value_per_user",
-    "events_hourly_rollup", "sessionize_events",
-    "rollup_returnflag_linestatus", "approx_distinct_customers",
-    "orders_with_heavy_items_sql", "orders_above_avg_sql",
-    "sessionize_native", "events_sliding_windows", "geo_total_count",
-    "geo_distinct_sources", "geo_shape_type_census", "geo_core_type_count",
-    "geo_source_counts", "geo_centroid_stats", "geo_global_bbox",
-    "geo_flip_sources", "geo_heatmap", "hex_heatmap",
-})
-
-# Round-2 gate window (the 50 names in CORRECTNESS_r02.json).
-_R2_SCORED = frozenset({
-    "q9_profit_by_nation_year", "sessionize_events", "hex_heatmap_pyramid",
-    "hex_heatmap_smoothed", "geo_heatmap_pyramid", "geo_normalized_bbox",
-    "gdb_scan_attrs", "gpkg_heatmap_roundtrip", "gdb_scan_oids",
-    "geo_heatmap_export", "geo_centroid_containment", "hex_heatmap_export",
-    "geo_hilbert_keys", "geo_convert_bbox", "io_ndjson_shape_stats",
-    "io_csv_wkt_scan", "io_wide_attrs_projection", "layout_morton_keys",
-    "shp_scan_census", "asof_click_view", "interval_error_activity",
-    "spatial_near_pairs", "points_in_polygons", "text_token_stats",
-    "text_quality_scores", "lang_id", "doc_fingerprints",
-    "token_stats_by_lang", "top_tokens", "tfidf_top_terms",
-    "stratified_sample", "decontaminate_overlap", "pii_scan",
-    "text_gopher_flags", "dedup_embedding_pairs", "dedup_exact_groups",
-    "dedup_exact_kept", "dedup_minhash_pairs", "dedup_components",
-    "dedup_simhash_pairs", "dedup_ngram_jaccard_pairs", "training_data_prep",
-    "similarity_topk", "similarity_near_pairs", "similarity_ann_lsh",
-    "dedup_embedding_lsh", "similarity_ivf", "similarity_ivf_kmeans",
-    "embedding_label_centroids", "multimodal_decode_meta",
-})
-
-# Round-3 gate window (the 50 names in CORRECTNESS_r03.json).
-_R3_SCORED = frozenset({
-    "multimodal_frame_sample", "multimodal_features", "sessionize_events",
-    "stratified_sample", "training_data_prep", "q2_top_acctbal_per_nation",
-    "q4_order_priority", "q7_volume_shipping", "q8_market_share",
-    "q15_top_supplier", "q19_disjunctive_revenue", "q22_idle_customers",
-    "q6_forecast_revenue", "q14_promo_revenue", "price_percentiles",
-    "q18_large_orders", "pivot_status_by_flag", "cube_orders",
-    "orders_by_year_month", "source_id_extract", "q1_pricing_summary",
-    "q3_shipping_priority", "q5_local_supplier_volume", "q10_returned_items",
-    "count_lineitem", "group_count_order_priority",
-    "count_distinct_customers", "minmax_orders", "orders_top15_by_price",
-    "filter_range_events", "customers_without_orders",
-    "suppliers_with_shipments", "union_all_names",
-    "custkeys_without_recent_orders", "top3_orders_per_customer",
-    "running_value_per_user", "events_hourly_rollup",
-    "rollup_returnflag_linestatus", "approx_distinct_customers",
-    "orders_with_heavy_items_sql", "orders_above_avg_sql",
-    "sessionize_native", "events_sliding_windows", "geo_total_count",
-    "geo_distinct_sources", "geo_shape_type_census", "geo_core_type_count",
-    "geo_source_counts", "geo_centroid_stats", "geo_global_bbox",
-})
-
-# Round-4 tier 0: the five registry-tail queries that have NEVER had a
-# driver CORRECTNESS row (positions 101-105 in the r3 ordering — the gate
-# scores only the first 50 dict-order entries per round), followed by the
-# three queries whose only driver row dates from round 1. Landing these 8
-# in the r4 window completes 105/105 ever-driver-scored.
-_TIER0 = (
-    "text_repetition",
-    "mixture_sample",
-    "dedup_embedding_lsh_audit",
-    "multimodal_feature_norms",
-    "h3_parent_rollup",
-    "geo_flip_sources",
-    "geo_heatmap",
-    "hex_heatmap",
-    # new in round 4 — fronted immediately per the ADVICE r3 policy
-    # (a new query must enter the next gate window, not the tail)
-    "training_shards",
-    "sequence_pack",
-    "multimodal_resize",
-    # round-4 session 2: span-level (sub-document) exact dedup + PQ ANN
-    "dedup_spans",
-    "similarity_pq_adc",
-    "similarity_pq_rerank",
-    "funnel_events",
-    "events_rolling_anomaly",
-    "source_cap_sample",
-    "text_unigram_surprisal",
-    "bpe_train_merges",
-    "bpe_segment_stats",
-    "geo_area_stats",
-    "geo_tile_census",
-    "geo_geohash_census",
-    "geo_simplify_stats",
-    "io_geojsonl_scan",
-    "multimodal_spectral",
-    "training_data_prep_v2",
-    "similarity_ivfpq",
-    "embedding_dim_stats",
-    # round-4 session 3
-    "semdedup",
-    "quality_deciles",
-    "cdc_latest_state",
-    "scd2_intervals",
-    "pagerank_trade",
-    "multimodal_ahash_groups",
-    "event_pattern_match",
-    "supplier_copurchase_pairs",
-    "spatial_nearest_neighbor",
-    "customer_spend_rank",
-    "multimodal_ahash_near_pairs",
-    "geo_haversine_span",
-    "geo_spatial_clusters",
-    "cohort_retention",
-    # round-4 session 2: the TPC-H completion pack (22/22)
-    "q11_important_parts",
-    "q12_priority_by_returnflag",
-    "q13_order_count_distribution",
-    "q16_supplier_part_variety",
-    "q17_small_quantity_revenue",
-    "q20_excess_shippers",
-    "q21_waiting_suppliers",
-)
-
-# Rotation history (which gate window scored which block):
-#   r1: first 50 of the original definition order (_R1_SCORED).
-#   r2: tier0 = never-scored packs fronted; window = _R2_SCORED.
-#   r3: tier0 = 2 never-scored + 3 oracle-typing fixes; window = _R3_SCORED.
-#   r4 (this ordering): tier0 above = the 5 never-scored r3 tail +
-#       3 r1-only geo queries + EVERY query added during round 4
-#       (sessions 2 and 3) — exactly 50, so the whole window is
-#       never-or-oldest-scored; r2-only greens follow, then r3 greens,
-#       then the rest. After r4 every registry entry has a driver row.
-REGISTRY = {
-    **{k: REGISTRY[k] for k in _TIER0},
-    # latest driver row is r2 — oldest coverage after tier 0.
-    **{
-        k: v
-        for k, v in REGISTRY.items()
-        if k in _R2_SCORED and k not in _R3_SCORED and k not in _TIER0
-    },
-    # r3 greens — most recently confirmed, re-scored as capacity allows.
-    **{
-        k: v
-        for k, v in REGISTRY.items()
-        if k in _R3_SCORED and k not in _TIER0
-    },
-    # safety net: anything not classified above keeps its place at the end.
-    **{
-        k: v
-        for k, v in REGISTRY.items()
-        if k not in _R2_SCORED and k not in _R3_SCORED and k not in _TIER0
-    },
-}
-
-# ---------------------------------------------------------------------------
-# Round-5 additions + window rotation. Policy (ADVICE r3, kept since):
-# every query added this round is FRONTED into the gate's 50-entry
-# scoring window the round it lands, so no never-scored tail regrows.
-# After the r4 union all pre-existing queries have driver rows; the r5
-# window = the new queries first, then the r4 tier — deliberately kept
-# in-window because round 5 modifies several of its members in place
-# (supplier_copurchase_pairs gains the enforced hub cap,
-# geo_haversine_span gains the asin clamp, event_pattern_match's oracle
-# gains the coalesce), and each needs a fresh driver row this round.
-# ---------------------------------------------------------------------------
-
 REGISTRY.update(
     {
         # hub-cap honesty metric for the (now enforced) co-purchase cap
@@ -1439,37 +1258,10 @@ REGISTRY.update(
     }
 )
 
-_R5_NEW = (
-    "supplier_copurchase_audit",
-    "h3_children_rollup",
-)
-
-REGISTRY = {
-    **{k: REGISTRY[k] for k in _R5_NEW},
-    **{k: v for k, v in REGISTRY.items() if k not in _R5_NEW},
-}
-
-# ---------------------------------------------------------------------------
-# Round-7 additions + window rotation.
-#
-# New surface: gridDisk/gridRing/gridDistance on real H3 ids
-# (layout/h3grid.py) — exact within non-pentagon base cells via integer
-# axial-lattice algebra, verified against the H3 documentation's
-# published gridDisk example (VERDICT r5 next-round item 4).
-#
-# Window policy (ADVICE r3, kept since): new queries FRONT the 50-entry
-# gate window, followed by the queries whose behavior changed since
-# their last driver score, then the oldest-scored cohort:
-#   - multimodal_image_formats: added r6 mid-registry, NEVER scored;
-#   - multimodal_decode_meta / multimodal_features: last scored r3,
-#     but r6 added JPEG payloads to the media fixture they aggregate;
-#   - gdb_scan_attrs / gdb_scan_oids: last scored r2, r6 rewrote the
-#     .gdbtablx sparse-bitmap row discovery under them;
-#   - geo_haversine_span: r7 restructured the shared haversine text
-#     (input-side NaN guard, NULL->NULL);
-#   - then the r2-scored cohort (oldest remaining driver rows). The
-#     r3-scored cohort rotates in next round.
-# ---------------------------------------------------------------------------
+# gridDisk / gridRing / gridDistance on real H3 ids (layout/h3grid.py):
+# exact within non-pentagon base cells via integer axial-lattice
+# algebra, verified against the H3 documentation's published gridDisk
+# example.
 
 from gis_etl_spark.layout import h3grid as H3G  # noqa: E402
 
@@ -1488,83 +1280,6 @@ REGISTRY.update(
     }
 )
 
-_R7_FRONT = (
-    # new in r7
-    "h3_grid_ring_children",
-    "h3_grid_disk_stats",
-    # changed since last driver score
-    "multimodal_image_formats",
-    "multimodal_decode_meta",
-    "multimodal_features",
-    "gdb_scan_attrs",
-    "gdb_scan_oids",
-    "geo_haversine_span",
-    # oldest driver rows (last scored r2)
-    "q9_profit_by_nation_year",
-    "hex_heatmap_pyramid",
-    "hex_heatmap_smoothed",
-    "geo_heatmap_pyramid",
-    "geo_normalized_bbox",
-    "gpkg_heatmap_roundtrip",
-    "geo_heatmap_export",
-    "geo_centroid_containment",
-    "hex_heatmap_export",
-    "geo_hilbert_keys",
-    "geo_convert_bbox",
-    "io_ndjson_shape_stats",
-    "io_csv_wkt_scan",
-    "io_wide_attrs_projection",
-    "layout_morton_keys",
-    "shp_scan_census",
-    "asof_click_view",
-    "interval_error_activity",
-    "spatial_near_pairs",
-    "points_in_polygons",
-    "text_token_stats",
-    "text_quality_scores",
-    "lang_id",
-    "doc_fingerprints",
-    "token_stats_by_lang",
-    "top_tokens",
-    "tfidf_top_terms",
-    "decontaminate_overlap",
-    "pii_scan",
-    "text_gopher_flags",
-    "dedup_embedding_pairs",
-    "dedup_exact_groups",
-    "dedup_exact_kept",
-    "dedup_minhash_pairs",
-    "dedup_components",
-    "dedup_simhash_pairs",
-    "dedup_ngram_jaccard_pairs",
-    "similarity_topk",
-    "similarity_near_pairs",
-    "similarity_ann_lsh",
-    "dedup_embedding_lsh",
-    "similarity_ivf",
-)
-
-REGISTRY = {
-    **{k: REGISTRY[k] for k in _R7_FRONT},
-    **{k: v for k, v in REGISTRY.items() if k not in _R7_FRONT},
-}
-
-# ---------------------------------------------------------------------------
-# Round-8 additions + window rotation.
-#
-# New surface: gridDistance as a driver contract
-# (h3_grid_distance_pairs) — closes the last un-oracled surface of
-# layout/h3grid.py (VERDICT r7 next-round item 6).
-#
-# Window policy (unchanged since r3): new queries front, then the
-# oldest-scored cohort. After r7, 51 queries' latest driver score is
-# r3 or older: similarity_ivf_kmeans / embedding_label_centroids
-# (r2) and the 49-query r3 cohort (TPC-H + early geo/events/text).
-# 1 new + 2 r2 + 47 r3 fill the 50-slot window; the two r3 leftovers
-# (union_all_names, source_id_extract — trivial single-op queries
-# with no shared-helper surface that changed since r3) rotate in r9.
-# ---------------------------------------------------------------------------
-
 REGISTRY.update(
     {
         "h3_grid_distance_pairs": (
@@ -1579,248 +1294,6 @@ REGISTRY.update(
         ),
     }
 )
-
-_R9_LEFTOVERS = (
-    "union_all_names",
-    "source_id_extract",
-    "multimodal_frame_sample",
-    "stratified_sample",
-    "count_distinct_customers",
-    "approx_distinct_customers",
-    # displaced from the r8 window by the session-2 additions (trivial
-    # single-op count/group queries, same rationale as the rows above)
-    "geo_total_count",
-    "geo_core_type_count",
-    "geo_source_counts",
-)
-
-_R8_FRONT = (
-    # new in r8
-    "h3_grid_distance_pairs",
-    "h3_grid_disk_members",
-    # new in r8 session 2 (must land scored — ADVICE r3 discipline)
-    "bloom_semi_orders",
-    "price_band_revenue",
-    "document_chunks",
-    # oracle-paired in r8 (was rows-only) — re-front with the new twins
-    "geo_hilbert_keys",
-    "points_in_polygons",
-    "geo_centroid_containment",
-    # last scored r2
-    "similarity_ivf_kmeans",
-    "embedding_label_centroids",
-    # the r3-scored cohort (latest driver rows from CORRECTNESS_r03)
-    "q1_pricing_summary",
-    "q2_top_acctbal_per_nation",
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q10_returned_items",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q18_large_orders",
-    "q19_disjunctive_revenue",
-    "q22_idle_customers",
-    "count_lineitem",
-    "custkeys_without_recent_orders",
-    "customers_without_orders",
-    "suppliers_with_shipments",
-    "group_count_order_priority",
-    "minmax_orders",
-    "cube_orders",
-    "rollup_returnflag_linestatus",
-    "pivot_status_by_flag",
-    "orders_above_avg_sql",
-    "orders_with_heavy_items_sql",
-    "orders_by_year_month",
-    "orders_top15_by_price",
-    "price_percentiles",
-    "top3_orders_per_customer",
-    "running_value_per_user",
-    "sessionize_events",
-    "sessionize_native",
-    "events_hourly_rollup",
-    "events_sliding_windows",
-    "filter_range_events",
-    "training_data_prep",
-    "geo_shape_type_census",
-    "geo_distinct_sources",
-    "geo_global_bbox",
-    "geo_centroid_stats",
-)
-
-assert len(_R8_FRONT) == 50, len(_R8_FRONT)
-
-REGISTRY = {
-    **{k: REGISTRY[k] for k in _R8_FRONT},
-    **{k: v for k, v in REGISTRY.items() if k not in _R8_FRONT},
-}
-
-# ---------------------------------------------------------------------------
-# Round-10 window rotation (VERDICT r9 item 2: the declared r9 rotation
-# never ran — queries.py was byte-identical to r8, so the driver
-# re-scored the identical 50-query window).
-#
-# Window policy (unchanged since r3): new queries front, then the
-# oldest-scored cohort. After r9 the latest driver score per query is:
-# r3 ×9 + r4 ×2 (the long-stale leftovers below), r6 ×49, r7 ×47,
-# r9 ×50. The 11 stale queries lead; the r6 cohort fills the rest of
-# the 50-slot window (16 r6 leftovers — multimodal_ahash_near_pairs,
-# multimodal_resize,
-# pagerank_trade, q11_important_parts, q12_priority_by_returnflag,
-# q13_order_count_distribution, similarity_pq_adc/_rerank,
-# source_cap_sample, spatial_nearest_neighbor, supplier_copurchase_*,
-# text_repetition, text_unigram_surprisal, training_data_prep_v2,
-# training_shards — rotate in r11 together with the r7 cohort).
-# New r10 queries are inserted at the head as they land.
-# ---------------------------------------------------------------------------
-
-_R10_FRONT = (
-    # new/upgraded in r10 — score first (the export twins were
-    # rows-only since r2; now oracle-paired via boundary-WKT SQL twins)
-    "chunk_dedup_groups",
-    "copurchase_triangles",
-    "customer_name_ed1_pairs",
-    "embedding_int8_stats",
-    "geo_convert_bbox",
-    "heavy_hitter_tokens",
-    "weighted_sample_docs",
-    "geo_heatmap_export",
-    "hex_heatmap_export",
-    "inverted_index_topk",
-    "kmv_distinct_customers",
-    "regex_token_stats",
-    "sampled_price_quantiles",
-    # stale: last scored r3/r4
-    "approx_distinct_customers",
-    "count_distinct_customers",
-    "geo_core_type_count",
-    "geo_source_counts",
-    "geo_total_count",
-    "multimodal_frame_sample",
-    "q20_excess_shippers",
-    "q21_waiting_suppliers",
-    "source_id_extract",
-    "stratified_sample",
-    "union_all_names",
-    # the r6 cohort, oldest-first fill
-    "bpe_segment_stats",
-    "bpe_train_merges",
-    "cdc_latest_state",
-    "cohort_retention",
-    "customer_spend_rank",
-    "dedup_embedding_lsh_audit",
-    "dedup_spans",
-    "embedding_dim_stats",
-    "event_pattern_match",
-    "events_rolling_anomaly",
-    "funnel_events",
-    "geo_area_stats",
-    "geo_flip_sources",
-    "geo_geohash_census",
-    "geo_heatmap",
-    "geo_simplify_stats",
-    "geo_spatial_clusters",
-    "geo_tile_census",
-    "h3_children_rollup",
-    "h3_parent_rollup",
-    "hex_heatmap",
-    "io_geojsonl_scan",
-    "mixture_sample",
-    "multimodal_ahash_groups",
-    "multimodal_feature_norms",
-    "multimodal_spectral",
-)
-
-assert len(_R10_FRONT) == 50, len(_R10_FRONT)
-assert all(k in REGISTRY for k in _R10_FRONT), [
-    k for k in _R10_FRONT if k not in REGISTRY
-]
-
-REGISTRY = {
-    **{k: REGISTRY[k] for k in _R10_FRONT},
-    **{k: v for k, v in REGISTRY.items() if k not in _R10_FRONT},
-}
-
-# ---------------------------------------------------------------------------
-# Round-11 window rotation (VERDICT r10 item 3). Latest driver score
-# per query after r10: r6 ×23, r7 ×44, r9 ×50, r10 ×50. Policy
-# unchanged: new queries front (6), then the oldest-scored cohort —
-# the full r6 cohort (23) plus the first 21 of the r7 cohort fill the
-# window; the 23 r7 leftovers (interval_error_activity,
-# io_csv_wkt_scan, io_ndjson_shape_stats, io_wide_attrs_projection,
-# lang_id … top_tokens, alphabetical tail) rotate in r12. After this
-# window no registry query's latest score predates r7.
-# ---------------------------------------------------------------------------
-
-_R11_FRONT = (
-    # new in r11
-    "similarity_int8_adc",
-    "chunk_decontaminate",
-    "fuzzy_decontaminate",
-    "leakage_safe_splits",
-    "cms_token_counts",
-    "bpe_fertility_by_lang",
-    # the r6 cohort (all 23 — oldest-scored in the registry)
-    "multimodal_ahash_near_pairs",
-    "multimodal_resize",
-    "pagerank_trade",
-    "q11_important_parts",
-    "q12_priority_by_returnflag",
-    "q13_order_count_distribution",
-    "q16_supplier_part_variety",
-    "q17_small_quantity_revenue",
-    "quality_deciles",
-    "scd2_intervals",
-    "semdedup",
-    "sequence_pack",
-    "similarity_ivfpq",
-    "similarity_pq_adc",
-    "similarity_pq_rerank",
-    "source_cap_sample",
-    "spatial_nearest_neighbor",
-    "supplier_copurchase_audit",
-    "supplier_copurchase_pairs",
-    "text_repetition",
-    "text_unigram_surprisal",
-    "training_data_prep_v2",
-    "training_shards",
-    # r7 cohort, alphabetical head (21 of 44)
-    "asof_click_view",
-    "decontaminate_overlap",
-    "dedup_components",
-    "dedup_embedding_lsh",
-    "dedup_embedding_pairs",
-    "dedup_exact_groups",
-    "dedup_exact_kept",
-    "dedup_minhash_pairs",
-    "dedup_ngram_jaccard_pairs",
-    "dedup_simhash_pairs",
-    "doc_fingerprints",
-    "gdb_scan_attrs",
-    "gdb_scan_oids",
-    "geo_haversine_span",
-    "geo_heatmap_pyramid",
-    "geo_normalized_bbox",
-    "gpkg_heatmap_roundtrip",
-    "h3_grid_disk_stats",
-    "h3_grid_ring_children",
-    "hex_heatmap_pyramid",
-    "hex_heatmap_smoothed",
-)
-
-assert len(_R11_FRONT) == 50, len(_R11_FRONT)
-assert all(k in REGISTRY for k in _R11_FRONT), [
-    k for k in _R11_FRONT if k not in REGISTRY
-]
-
-REGISTRY = {
-    **{k: REGISTRY[k] for k in _R11_FRONT},
-    **{k: v for k, v in REGISTRY.items() if k not in _R11_FRONT},
-}
 
 # ---------------------------------------------------------------------------
 # Round-12 additions.
@@ -1934,170 +1407,6 @@ REGISTRY.update(
 )
 
 # ---------------------------------------------------------------------------
-# Round-12 window rotation (VERDICT r11 item 7). Latest driver score
-# per query after r11: r7 ×23, r9 ×50, r10 ×50, r11 ×50. Policy
-# unchanged: the 7 r12 additions front, then the queries whose PLAN
-# changed this round since their last score (the single-partition-
-# window rewires: cms_token_counts + the ADC/kmeans retrieval family —
-# outputs verified identical locally, fronted so the driver re-pins
-# them), then the full r7 cohort (23 — oldest in the registry; its
-# three changed members similarity_topk/ann_lsh/ivf are already
-# here), then the alphabetical head of the r9 cohort fills
-# the window (14 after the 5th-7th r12 additions displaced three).
-# After this window no registry query's latest score
-# predates r9; the r9 tail (35, geo_hilbert_keys / geo_shape_type_census /
-# group_count_order_priority …
-# training_data_prep) rotates in r13.
-# ---------------------------------------------------------------------------
-
-_R12_FRONT = (
-    # new in r12
-    "similarity_ivfpq_rerank",
-    "incremental_dedup_pairs",
-    "similarity_hard_negatives",
-    "corpus_dup_ngram_fraction",
-    "kmv_source_overlap",
-    "asof_click_view_tolerance",
-    "source_data_card",
-    # plan changed this round since last score
-    "cms_token_counts",
-    "similarity_pq_adc",
-    "similarity_pq_rerank",
-    "similarity_ivfpq",
-    "similarity_int8_adc",
-    "similarity_ivf_kmeans",
-    # the r7 cohort (all 23 — oldest-scored in the registry)
-    "interval_error_activity",
-    "io_csv_wkt_scan",
-    "io_ndjson_shape_stats",
-    "io_wide_attrs_projection",
-    "lang_id",
-    "layout_morton_keys",
-    "multimodal_decode_meta",
-    "multimodal_features",
-    "multimodal_image_formats",
-    "pii_scan",
-    "q9_profit_by_nation_year",
-    "shp_scan_census",
-    "similarity_ann_lsh",
-    "similarity_ivf",
-    "similarity_near_pairs",
-    "similarity_topk",
-    "spatial_near_pairs",
-    "text_gopher_flags",
-    "text_quality_scores",
-    "text_token_stats",
-    "tfidf_top_terms",
-    "token_stats_by_lang",
-    "top_tokens",
-    # r9 cohort, alphabetical head (17 of 49)
-    "bloom_semi_orders",
-    "count_lineitem",
-    "cube_orders",
-    "custkeys_without_recent_orders",
-    "customers_without_orders",
-    "document_chunks",
-    "embedding_label_centroids",
-    "events_hourly_rollup",
-    "events_sliding_windows",
-    "filter_range_events",
-    "geo_centroid_containment",
-    "geo_centroid_stats",
-    "geo_distinct_sources",
-    "geo_global_bbox",
-)
-
-assert len(_R12_FRONT) == 50, len(_R12_FRONT)
-assert all(k in REGISTRY for k in _R12_FRONT), [
-    k for k in _R12_FRONT if k not in REGISTRY
-]
-
-REGISTRY = {
-    **{k: REGISTRY[k] for k in _R12_FRONT},
-    **{k: v for k, v in REGISTRY.items() if k not in _R12_FRONT},
-}
-
-# ---------------------------------------------------------------------------
-# Round-13 window rotation (VERDICT r12 item 2). Latest driver score
-# per query after r12: r9 ×35, r10 ×50, r11 ×45, r12 ×50. The window:
-# the 7 r13 additions front, then the 3 queries whose PLAN changed
-# this round since their last score (similarity_ivfpq_rerank — the
-# R=100 knee pin; kmv_source_overlap — the NULL-group guard;
-# similarity_ivfpq — shared probe/rerank refactor, plan unchanged but
-# cheap to re-pin), then the ENTIRE r9 tail (35 — exactly the set the
-# r12 note planned), then the alphabetical head of the r10 cohort
-# fills the window (5 of 50). After this window no registry query's
-# latest score predates r10; the r10 tail (45) rotates in r14.
-# ---------------------------------------------------------------------------
-
-_R13_FRONT = (
-    # new in r13
-    "kmv_overlap_sketch",
-    "similarity_ivfpq_serve",
-    "dedup_canonical_keepers",
-    "dedup_cluster_stats",
-    "mixture_temperature_weights",
-    "mixture_token_plan",
-    "pii_redact",
-    # plan changed this round since last score
-    "similarity_ivfpq_rerank",
-    "kmv_source_overlap",
-    "similarity_ivfpq",
-    # the r9 tail (all 35 — oldest-scored in the registry)
-    "geo_hilbert_keys",
-    "geo_shape_type_census",
-    "group_count_order_priority",
-    "h3_grid_disk_members",
-    "h3_grid_distance_pairs",
-    "minmax_orders",
-    "orders_above_avg_sql",
-    "orders_by_year_month",
-    "orders_top15_by_price",
-    "orders_with_heavy_items_sql",
-    "pivot_status_by_flag",
-    "points_in_polygons",
-    "price_band_revenue",
-    "price_percentiles",
-    "q10_returned_items",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q18_large_orders",
-    "q19_disjunctive_revenue",
-    "q1_pricing_summary",
-    "q22_idle_customers",
-    "q2_top_acctbal_per_nation",
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "rollup_returnflag_linestatus",
-    "running_value_per_user",
-    "sessionize_events",
-    "sessionize_native",
-    "suppliers_with_shipments",
-    "top3_orders_per_customer",
-    "training_data_prep",
-    # r10 cohort, alphabetical head (5 of 50)
-    "approx_distinct_customers",
-    "bpe_segment_stats",
-    "bpe_train_merges",
-    "cdc_latest_state",
-    "chunk_dedup_groups",
-)
-
-assert len(_R13_FRONT) == 50, len(_R13_FRONT)
-assert all(k in REGISTRY for k in _R13_FRONT), [
-    k for k in _R13_FRONT if k not in REGISTRY
-]
-
-REGISTRY = {
-    **{k: REGISTRY[k] for k in _R13_FRONT},
-    **{k: v for k, v in REGISTRY.items() if k not in _R13_FRONT},
-}
-
-# ---------------------------------------------------------------------------
 # Round-14 additions.
 # ---------------------------------------------------------------------------
 REGISTRY.update(
@@ -2145,183 +1454,6 @@ REGISTRY.update(
 )
 
 # ---------------------------------------------------------------------------
-# Round-14 window rotation (VERDICT r13 item 3). Latest driver score
-# per query after r13: r10 ×45, r11 ×45, r12 ×47, r13 ×50. The window:
-# the 8 r14 additions front (dedup_apply_keepers, mixture_draw_plan,
-# mixture_draw_split, pii_spans, corpus_build_funnel, ann_drift_stat,
-# bm25_topk, cdc_merge_apply), then the 2 r13-scored queries whose
-# OUTPUT changed this round (pii_redact — ipv4/card kinds + new
-# planted positives + Luhn audit columns; mixture_temperature_weights
-# — the weight column moved from round() to the explicit fixedpoint
-# half-up quantization, ADVICE r13), then 40 of the 45-query r10 tail.
-# FIVE r10-tail queries (union_all_names, source_id_extract,
-# count_distinct_customers, multimodal_frame_sample, geo_total_count —
-# trivially stable single-op queries, plan-untouched since r10)
-# yielded their slots to the late-r14 additions; after this window
-# exactly those five (plus the try_cast-only KMV pair, whose OUTPUT
-# is bit-identical on any corpus whose sources parse — verified
-# locally) still predate r11, and all re-pin in r15 with the r11
-# cohort.
-# ---------------------------------------------------------------------------
-
-_R14_FRONT = (
-    # new in r14
-    "dedup_apply_keepers",
-    "mixture_draw_plan",
-    "mixture_draw_split",
-    "pii_spans",
-    "corpus_build_funnel",
-    "ann_drift_stat",
-    "bm25_topk",
-    "cdc_merge_apply",
-    # output changed this round since last score
-    "pii_redact",
-    "mixture_temperature_weights",
-    # the r10 tail (all 45 — oldest-scored in the registry)
-    "cohort_retention",
-    "copurchase_triangles",
-    "customer_name_ed1_pairs",
-    "customer_spend_rank",
-    "dedup_embedding_lsh_audit",
-    "dedup_spans",
-    "embedding_dim_stats",
-    "embedding_int8_stats",
-    "event_pattern_match",
-    "events_rolling_anomaly",
-    "funnel_events",
-    "geo_area_stats",
-    "geo_convert_bbox",
-    "geo_core_type_count",
-    "geo_flip_sources",
-    "geo_geohash_census",
-    "geo_heatmap",
-    "geo_heatmap_export",
-    "geo_simplify_stats",
-    "geo_source_counts",
-    "geo_spatial_clusters",
-    "geo_tile_census",
-    "h3_children_rollup",
-    "h3_parent_rollup",
-    "heavy_hitter_tokens",
-    "hex_heatmap",
-    "hex_heatmap_export",
-    "inverted_index_topk",
-    "io_geojsonl_scan",
-    "kmv_distinct_customers",
-    "mixture_sample",
-    "multimodal_ahash_groups",
-    "multimodal_feature_norms",
-    "multimodal_spectral",
-    "q20_excess_shippers",
-    "q21_waiting_suppliers",
-    "regex_token_stats",
-    "sampled_price_quantiles",
-    "stratified_sample",
-    "weighted_sample_docs",
-)
-
-assert len(_R14_FRONT) == 50, len(_R14_FRONT)
-assert all(k in REGISTRY for k in _R14_FRONT), [
-    k for k in _R14_FRONT if k not in REGISTRY
-]
-
-REGISTRY = {
-    **{k: REGISTRY[k] for k in _R14_FRONT},
-    **{k: v for k, v in REGISTRY.items() if k not in _R14_FRONT},
-}
-
-# ---------------------------------------------------------------------------
-# Round-15 window rotation (VERDICT r14 item 3 / COVERAGE.md's r15
-# promise, executed). Latest driver score per query after r14:
-# r10 ×5, r11 ×45, r12 ×47, r13 ×48, r14 ×50. The window:
-# the 5 r15 additions (bm25_topk_pruned, bm25_topk_stored,
-# bm25_stats_drift, bm25_topk_after_append, cdc_merge_apply_log), the
-# 1 output-changed query
-# (multimodal_feature_norms — rows-only → oracle-paired, new twinnable
-# kernel + fixedpoint L1 schema), the 3 plan-changed queries
-# (bm25_topk — posting-score subplan extracted for the pruned rung;
-# cdc_merge_apply — the anti-join now covers 'I' keys, ADVICE r14;
-# corpus_build_funnel — flags-table indirection), then the SEVEN
-# promised stale entries (the 5 r10 single-op queries + the
-# try_cast-touched KMV pair, unscored since their r14 plan edit),
-# then the 34 alphabetically-first of the 45-query r11 cohort.
-# The 11 r11 leftovers (quality_deciles is IN; scd2_intervals,
-# semdedup, sequence_pack, source_cap_sample,
-# spatial_nearest_neighbor, supplier_copurchase_audit,
-# supplier_copurchase_pairs, text_repetition, text_unigram_surprisal,
-# training_data_prep_v2, training_shards) become the oldest tail and
-# rotate in r16.
-# ---------------------------------------------------------------------------
-
-_R15_FRONT = (
-    # new in r15
-    "bm25_topk_pruned",
-    "bm25_topk_stored",
-    "bm25_stats_drift",
-    "bm25_topk_after_append",
-    "cdc_merge_apply_log",
-    # output changed since last score
-    "multimodal_feature_norms",
-    # plan changed since last score
-    "bm25_topk",
-    "cdc_merge_apply",
-    "corpus_build_funnel",
-    # the seven promised stale entries
-    "union_all_names",
-    "source_id_extract",
-    "count_distinct_customers",
-    "multimodal_frame_sample",
-    "geo_total_count",
-    "kmv_source_overlap",
-    "kmv_overlap_sketch",
-    # the r11 cohort (oldest-scored), alphabetical
-    "asof_click_view",
-    "bpe_fertility_by_lang",
-    "chunk_decontaminate",
-    "decontaminate_overlap",
-    "dedup_components",
-    "dedup_embedding_lsh",
-    "dedup_embedding_pairs",
-    "dedup_exact_groups",
-    "dedup_exact_kept",
-    "dedup_minhash_pairs",
-    "dedup_ngram_jaccard_pairs",
-    "dedup_simhash_pairs",
-    "doc_fingerprints",
-    "fuzzy_decontaminate",
-    "gdb_scan_attrs",
-    "gdb_scan_oids",
-    "geo_haversine_span",
-    "geo_heatmap_pyramid",
-    "geo_normalized_bbox",
-    "gpkg_heatmap_roundtrip",
-    "h3_grid_disk_stats",
-    "h3_grid_ring_children",
-    "hex_heatmap_pyramid",
-    "hex_heatmap_smoothed",
-    "leakage_safe_splits",
-    "multimodal_ahash_near_pairs",
-    "multimodal_resize",
-    "pagerank_trade",
-    "q11_important_parts",
-    "q12_priority_by_returnflag",
-    "q13_order_count_distribution",
-    "q16_supplier_part_variety",
-    "q17_small_quantity_revenue",
-    "quality_deciles",
-)
-
-assert len(_R15_FRONT) == 50, len(_R15_FRONT)
-assert all(k in REGISTRY for k in _R15_FRONT), [
-    k for k in _R15_FRONT if k not in REGISTRY
-]
-
-REGISTRY = {
-    **{k: REGISTRY[k] for k in _R15_FRONT},
-    **{k: v for k, v in REGISTRY.items() if k not in _R15_FRONT},
-}
-
-# ---------------------------------------------------------------------------
 # Round 16: the incremental-funnel contract query (VERDICT r15 item 5)
 # — the increment's stage flags from the frozen-history probes, hash-
 # pinned against a full re-derive over base ∪ increment — plus its
@@ -2362,54 +1494,53 @@ REGISTRY.update(
 )
 
 # ---------------------------------------------------------------------------
-# Round-16 window rotation (VERDICT r15 item 2, executed exactly as
-# promised at the r15 close). Latest driver score per query after r15:
-# r11 ×11, r12 ×47, r13 ×46, r14 ×46, r15 ×50. The window: the 1 r16
-# addition, the ELEVEN promised r11 leftovers (the rotation debt named
-# in the r15 comment above), the 3 plan-changed queries
-# (bm25_topk_stored / bm25_topk_after_append — the de-skewed champion
-# build + stopword-free stored postings; cdc_merge_apply_log — the
-# explicit intra-batch op-rank in the compaction struct), then the 33
-# alphabetically-first of the 47-query r12 cohort. The 14 r12
-# leftovers (similarity_ivf, similarity_ivf_kmeans,
-# similarity_near_pairs, similarity_pq_adc, similarity_pq_rerank,
-# similarity_topk, source_data_card, spatial_near_pairs,
-# text_gopher_flags, text_quality_scores, text_token_stats,
-# tfidf_top_terms, token_stats_by_lang, top_tokens) become the oldest
-# tail and rotate in r17.
-# The component tuples are exported separately so the COVERAGE.md
-# rotation-narrative counts are test-assertable set arithmetic
-# (VERDICT r15 item 6 — no more prose-count drift).
+# Gate window: the driver hash-checks only the first 50 entries in dict
+# order against their oracles. WINDOW is what `python tools/rotate.py`
+# prints for census round WINDOW_CENSUS: PLAN_CHANGED first, then the
+# queries with the oldest latest driver score (never scored first),
+# ties by name. PLAN_CHANGED names the queries whose physical plan
+# changed since their latest driver score; a change that restructures
+# a plan adds its queries here and re-runs the tool.
 # ---------------------------------------------------------------------------
 
-_R16_NEW = (
-    "corpus_flags_increment",
-    "flags_increment_risk",
-    "incremental_dedup_pairs_stored",
-)
-_R16_R11_LEFTOVERS = (
-    "scd2_intervals",
-    "semdedup",
-    "sequence_pack",
-    "source_cap_sample",
-    "spatial_nearest_neighbor",
-    "supplier_copurchase_audit",
-    "supplier_copurchase_pairs",
-    "text_repetition",
-    "text_unigram_surprisal",
-    "training_data_prep_v2",
-    "training_shards",
-)
-_R16_PLAN_CHANGED = (
-    "bm25_topk_stored",
-    "bm25_topk_after_append",
-    "cdc_merge_apply_log",
-)
-_R16_R12_COHORT = (
+PLAN_CHANGED: tuple[str, ...] = ()
+WINDOW_CENSUS = 19
+WINDOW = (
+    "dedup_embedding_pairs",
+    "dedup_exact_groups",
+    "dedup_exact_kept",
+    "dedup_minhash_pairs",
+    "dedup_ngram_jaccard_pairs",
+    "dedup_simhash_pairs",
+    "doc_fingerprints",
+    "fuzzy_decontaminate",
+    "gdb_scan_attrs",
+    "gdb_scan_oids",
+    "geo_haversine_span",
+    "geo_heatmap_pyramid",
+    "geo_normalized_bbox",
+    "geo_total_count",
+    "gpkg_heatmap_roundtrip",
+    "h3_grid_disk_stats",
+    "h3_grid_ring_children",
+    "hex_heatmap_pyramid",
+    "hex_heatmap_smoothed",
+    "kmv_overlap_sketch",
+    "kmv_source_overlap",
+    "multimodal_ahash_near_pairs",
+    "multimodal_feature_norms",
+    "multimodal_frame_sample",
+    "multimodal_resize",
+    "q11_important_parts",
+    "q12_priority_by_returnflag",
+    "q13_order_count_distribution",
+    "q16_supplier_part_variety",
+    "q17_small_quantity_revenue",
+    "source_id_extract",
+    "union_all_names",
     "asof_click_view_tolerance",
     "bloom_semi_orders",
-    "cms_token_counts",
-    "corpus_dup_ngram_fraction",
+    "cdc_merge_apply_log",
     "count_lineitem",
     "cube_orders",
     "custkeys_without_recent_orders",
@@ -2425,309 +1556,9 @@ _R16_R12_COHORT = (
     "geo_global_bbox",
     "incremental_dedup_pairs",
     "interval_error_activity",
-    "io_csv_wkt_scan",
-    "io_ndjson_shape_stats",
-    "io_wide_attrs_projection",
-    "lang_id",
-    "layout_morton_keys",
-    "multimodal_decode_meta",
-    "multimodal_features",
-    "multimodal_image_formats",
-    "pii_scan",
-    "q9_profit_by_nation_year",
-    "shp_scan_census",
-    "similarity_ann_lsh",
-    "similarity_hard_negatives",
-    "similarity_int8_adc",
 )
-_R16_FRONT = (
-    _R16_NEW + _R16_R11_LEFTOVERS + _R16_PLAN_CHANGED + _R16_R12_COHORT
-)
-
-assert len(_R16_FRONT) == 50, len(_R16_FRONT)
-assert len(set(_R16_FRONT)) == 50
-assert all(k in REGISTRY for k in _R16_FRONT), [
-    k for k in _R16_FRONT if k not in REGISTRY
-]
 
 REGISTRY = {
-    **{k: REGISTRY[k] for k in _R16_FRONT},
-    **{k: v for k, v in REGISTRY.items() if k not in _R16_FRONT},
-}
-
-# ---------------------------------------------------------------------------
-# Round-17 window rotation (VERDICT r16 item 2, executed exactly as
-# promised at the r16 close). Latest driver score per query after r16:
-# r12 ×14, r13 ×46, r14 ×46, r15 ×47, r16 ×50. The window: the 1 r17
-# addition (corpus_flags_rederive — the monitor's targeted
-# remediation), the FOURTEEN promised r12 leftovers (the rotation debt
-# named in the r16 comment above), the 3 plan-changed queries
-# (flags_increment_risk — now served from the stored quality/members
-# snapshot tables; corpus_flags_increment — the probe-then-extend
-# ordering guard + the stored probe's self-match filter;
-# incremental_dedup_pairs_stored — the same self-match filter), then
-# the 32 alphabetically-first of the 46-query r13 cohort. The 14 r13
-# leftovers (q5_local_supplier_volume, q6_forecast_revenue,
-# q7_volume_shipping, q8_market_share, rollup_returnflag_linestatus,
-# running_value_per_user, sessionize_events, sessionize_native,
-# similarity_ivfpq, similarity_ivfpq_rerank, similarity_ivfpq_serve,
-# suppliers_with_shipments, top3_orders_per_customer,
-# training_data_prep) become the oldest tail and rotate in r18. After
-# this window no query's latest score predates r13.
-# ---------------------------------------------------------------------------
-
-_R17_NEW = ("corpus_flags_rederive",)
-_R17_R12_LEFTOVERS = (
-    "similarity_ivf",
-    "similarity_ivf_kmeans",
-    "similarity_near_pairs",
-    "similarity_pq_adc",
-    "similarity_pq_rerank",
-    "similarity_topk",
-    "source_data_card",
-    "spatial_near_pairs",
-    "text_gopher_flags",
-    "text_quality_scores",
-    "text_token_stats",
-    "tfidf_top_terms",
-    "token_stats_by_lang",
-    "top_tokens",
-)
-_R17_PLAN_CHANGED = (
-    "flags_increment_risk",
-    "corpus_flags_increment",
-    "incremental_dedup_pairs_stored",
-)
-_R17_R13_COHORT = (
-    "approx_distinct_customers",
-    "bpe_segment_stats",
-    "bpe_train_merges",
-    "cdc_latest_state",
-    "chunk_dedup_groups",
-    "dedup_canonical_keepers",
-    "dedup_cluster_stats",
-    "geo_hilbert_keys",
-    "geo_shape_type_census",
-    "group_count_order_priority",
-    "h3_grid_disk_members",
-    "h3_grid_distance_pairs",
-    "minmax_orders",
-    "mixture_token_plan",
-    "orders_above_avg_sql",
-    "orders_by_year_month",
-    "orders_top15_by_price",
-    "orders_with_heavy_items_sql",
-    "pivot_status_by_flag",
-    "points_in_polygons",
-    "price_band_revenue",
-    "price_percentiles",
-    "q10_returned_items",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q18_large_orders",
-    "q19_disjunctive_revenue",
-    "q1_pricing_summary",
-    "q22_idle_customers",
-    "q2_top_acctbal_per_nation",
-    "q3_shipping_priority",
-    "q4_order_priority",
-)
-_R17_FRONT = (
-    _R17_NEW + _R17_R12_LEFTOVERS + _R17_PLAN_CHANGED + _R17_R13_COHORT
-)
-
-assert len(_R17_FRONT) == 50, len(_R17_FRONT)
-assert len(set(_R17_FRONT)) == 50
-assert all(k in REGISTRY for k in _R17_FRONT), [
-    k for k in _R17_FRONT if k not in REGISTRY
-]
-
-REGISTRY = {
-    **{k: REGISTRY[k] for k in _R17_FRONT},
-    **{k: v for k, v in REGISTRY.items() if k not in _R17_FRONT},
-}
-
-# ---------------------------------------------------------------------------
-# Round-18 window rotation (VERDICT r17 item 3, executed exactly as the
-# r17 comment above promised). Latest driver score per query after r17:
-# r13 ×14, r14 ×46, r15 ×47, r16 ×47, r17 ×50. r18 is an OPTIMIZATION
-# round — no new queries — so the window is: the FOURTEEN promised r13
-# leftovers (the rotation debt named above), then every declared query
-# whose PHYSICAL PLAN this round's optimizations changed (the r17
-# plan-changed precedent: a restructured query re-pins against its
-# oracle even if recently scored — OPTIMIZATION_r18.md names each
-# change), then the 12 alphabetically-first of the r14 cohort. The
-# remaining 30 r14-scored queries are the oldest tail and rotate in
-# r19. After this window no query's latest score predates r14.
-# ---------------------------------------------------------------------------
-
-_R18_R13_LEFTOVERS = (
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "rollup_returnflag_linestatus",
-    "running_value_per_user",
-    "sessionize_events",
-    "sessionize_native",
-    "similarity_ivfpq",
-    "similarity_ivfpq_rerank",
-    "similarity_ivfpq_serve",
-    "suppliers_with_shipments",
-    "top3_orders_per_customer",
-    "training_data_prep",
-)
-_R18_PLAN_CHANGED = (
-    # corpus-flags family: driver union-find gate, 2-exchange fixpoint,
-    # stored attrs table, concurrent materialization (changes 1-6)
-    "corpus_flags_rederive",
-    "corpus_flags_increment",
-    "flags_increment_risk",
-    "corpus_build_funnel",
-    "incremental_dedup_pairs_stored",
-    # component-label session memo + pair-edge reuse (changes 3, 9)
-    "dedup_canonical_keepers",
-    "dedup_cluster_stats",
-    "leakage_safe_splits",
-    # ED<=1 dedup: dropped global distinct, shared frames (change 10)
-    "customer_name_ed1_pairs",
-    # selectExpr Hilbert key assembly (change 11)
-    "geo_hilbert_keys",
-    # BM25 chain: one corpus explode; stored-serve single probe (8, 14)
-    "bm25_topk",
-    "bm25_topk_pruned",
-    "bm25_topk_stored",
-    "bm25_topk_after_append",
-    # co-purchase bipartite projection: 4 subtree copies -> 1 (13)
-    "supplier_copurchase_pairs",
-    "supplier_copurchase_audit",
-    "copurchase_triangles",
-    # one corpus pass text ops (15); funnel scan dedup (17)
-    "quality_deciles",
-    "text_unigram_surprisal",
-    "funnel_events",
-    # spatial joins: WKB decode once (19)
-    "spatial_near_pairs",
-    "spatial_nearest_neighbor",
-    "geo_spatial_clusters",
-    # LSH verify parallelized (22)
-    "dedup_embedding_lsh",
-)
-_R18_R14_COHORT = (
-    "ann_drift_stat",
-    "cohort_retention",
-    "customer_spend_rank",
-    "dedup_apply_keepers",
-    "dedup_embedding_lsh_audit",
-    "dedup_spans",
-    "embedding_dim_stats",
-    "embedding_int8_stats",
-    "event_pattern_match",
-    "events_rolling_anomaly",
-    "geo_area_stats",
-    "geo_convert_bbox",
-)
-_R18_FRONT = (
-    _R18_R13_LEFTOVERS + _R18_PLAN_CHANGED + _R18_R14_COHORT
-)
-
-assert len(_R18_FRONT) == 50, len(_R18_FRONT)
-assert len(set(_R18_FRONT)) == 50
-assert all(k in REGISTRY for k in _R18_FRONT), [
-    k for k in _R18_FRONT if k not in REGISTRY
-]
-
-REGISTRY = {
-    **{k: REGISTRY[k] for k in _R18_FRONT},
-    **{k: v for k, v in REGISTRY.items() if k not in _R18_FRONT},
-}
-
-# ---------------------------------------------------------------------------
-# Round-19 window rotation (VERDICT r18 item 8, executed exactly as the
-# r18 comment above promised). Latest driver score per query after r18:
-# r14 ×30, r15 ×41, r16 ×41, r17 ×42, r18 ×50. r19 is the second
-# OPTIMIZATION round — no new queries — so the window is: the THIRTY
-# promised r14 leftovers (the oldest tail named above), then every
-# declared query whose PHYSICAL PLAN this round's optimizations changed
-# and that is not already among the leftovers (the re-pin precedent —
-# OPTIMIZATION_r19.md names each change), then the 8
-# alphabetically-first of the 41-query r15 cohort. After this window no
-# query's latest score predates r15.
-# ---------------------------------------------------------------------------
-
-_R19_R14_LEFTOVERS = (
-    "geo_core_type_count",
-    "geo_flip_sources",
-    "geo_geohash_census",
-    "geo_heatmap",
-    "geo_heatmap_export",
-    "geo_simplify_stats",
-    "geo_source_counts",
-    "geo_tile_census",
-    "h3_children_rollup",
-    "h3_parent_rollup",
-    "heavy_hitter_tokens",
-    "hex_heatmap",
-    "hex_heatmap_export",       # also r19 plan-changed (cell respread)
-    "inverted_index_topk",
-    "io_geojsonl_scan",
-    "kmv_distinct_customers",
-    "mixture_draw_plan",
-    "mixture_draw_split",
-    "mixture_sample",
-    "mixture_temperature_weights",
-    "multimodal_ahash_groups",
-    "multimodal_spectral",
-    "pii_redact",               # also r19 plan-changed (spread read)
-    "pii_spans",                # also r19 plan-changed (spread read)
-    "q20_excess_shippers",
-    "q21_waiting_suppliers",
-    "regex_token_stats",
-    "sampled_price_quantiles",
-    "stratified_sample",
-    "weighted_sample_docs",
-)
-_R19_PLAN_CHANGED = (
-    # co-purchase fan-out respread + pair-keyed exchange
-    "supplier_copurchase_pairs",
-    "copurchase_triangles",
-    # PQ/IVFPQ literal-codebook distance tables (createDataFrame +
-    # broadcast join removed from every family member)
-    "similarity_pq_adc",
-    "similarity_pq_rerank",
-    "similarity_ivfpq",
-    "similarity_ivfpq_rerank",
-    "similarity_ivfpq_serve",
-    # ED≤1 deletion-variant checkpoint partitioned on the join key
-    "customer_name_ed1_pairs",
-    # persisted edge cache coalesced to cluster width
-    "pagerank_trade",
-    # scale-gated spread of the single-split corpus scan
-    "cms_token_counts",
-    "corpus_dup_ngram_fraction",
-    "text_repetition",
-)
-_R19_R15_COHORT = (
-    "asof_click_view",
-    "bm25_stats_drift",
-    "bpe_fertility_by_lang",
-    "cdc_merge_apply",
-    "chunk_decontaminate",
-    "count_distinct_customers",
-    "decontaminate_overlap",
-    "dedup_components",
-)
-_R19_FRONT = (
-    _R19_R14_LEFTOVERS + _R19_PLAN_CHANGED + _R19_R15_COHORT
-)
-
-assert len(_R19_FRONT) == 50, len(_R19_FRONT)
-assert len(set(_R19_FRONT)) == 50
-assert all(k in REGISTRY for k in _R19_FRONT), [
-    k for k in _R19_FRONT if k not in REGISTRY
-]
-
-REGISTRY = {
-    **{k: REGISTRY[k] for k in _R19_FRONT},
-    **{k: v for k, v in REGISTRY.items() if k not in _R19_FRONT},
+    **{k: REGISTRY[k] for k in WINDOW},
+    **{k: v for k, v in REGISTRY.items() if k not in WINDOW},
 }

@@ -198,6 +198,27 @@ def test_bench_final_line_keeps_prior_reported_queries():
     assert not any(n in d0["queries"] for n in prior)
 
 
+def test_bench_prior_names_are_the_driver_line_only(tmp_path, monkeypatch):
+    """The noise gate's priors merge the newest driver line with the
+    local full record, but only the driver line's names may be kept
+    first in the final line: the merged set covers every entry, which
+    leaves the final line ordered by wall alone."""
+    import json
+
+    import bench
+
+    (tmp_path / "BENCH_r07.json").write_text(
+        json.dumps({"parsed": {"queries": {"a": 1.0, "b": 2.0}}})
+    )
+    (tmp_path / "BENCH_local_latest.json").write_text(
+        json.dumps({"queries": {"a": 9.0, "c": 3.0, "d": 4.0}})
+    )
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    prior, prior_names = bench._prior_round_timings()
+    assert prior == {"a": 1.0, "b": 2.0, "c": 3.0, "d": 4.0}
+    assert sorted(prior_names) == ["a", "b"]
+
+
 def test_cli_incremental_dedup_and_hard_negatives(tmp_path):
     """The r12 subcommands end-to-end in subprocesses; outputs carry
     the contract columns and plausible row counts."""

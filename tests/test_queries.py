@@ -15,6 +15,12 @@ from gis_etl_spark.queries import REGISTRY
 from tools.check_oracle import value_hash
 
 from conftest import SF_DIR
+from test_plan_hygiene import (
+    _GATED_QUADRATIC_BASELINES,
+    _TINY_SINGLEPART_WINDOWS,
+    _plan,
+    _window_feed_exchanges,
+)
 
 
 @pytest.fixture(scope="module")
@@ -30,6 +36,14 @@ def duck():
 def test_query_matches_oracle(spark, sf_dir, duck, name):
     builder, oracle = REGISTRY[name]
     sdf = builder(spark, sf_dir)
+    # the registry-wide plan audits of test_plan_hygiene, on the plan
+    # collect() runs anyway
+    plan = _plan(sdf)
+    if name not in _GATED_QUADRATIC_BASELINES:
+        assert "CartesianProduct" not in plan
+    if name not in _TINY_SINGLEPART_WINDOWS:
+        feeds = _window_feed_exchanges(plan)
+        assert not [f for f in feeds if "SinglePartition" in f], feeds
     srows = [tuple(r) for r in sdf.collect()]
     scols = sdf.columns
     if oracle is None:
@@ -95,178 +109,30 @@ def test_doc_registry_counts():
                 found_twin += 1
     assert found_twin >= 1, "the benched-twin marker must exist"
 
-    # VERDICT r15 item 6 — the rotation-NARRATIVE counts drifted in
-    # r15 prose (37/8 vs the actual 34/11). The r16 markers are set
-    # arithmetic over the exported rotation tuples plus the
-    # CORRECTNESS-file latest-score census frozen at r15 (the state
-    # the r16 promise was made against), so this class of drift now
-    # fails a test.
-    import glob
-    import json
-
-    from gis_etl_spark.queries import (
-        _R16_FRONT,
-        _R16_R11_LEFTOVERS,
-        _R16_R12_COHORT,
-    )
-
-    latest: dict[str, int] = {}
-    for f in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"_r(\d+)\.json$", f).group(1))
-        if rnd > 15:
-            continue
-        with open(f) as fh:
-            for q in json.load(fh):
-                latest[q] = max(latest.get(q, 0), rnd)
-    r11_old = {q for q, r in latest.items() if r <= 11}
-    assert set(_R16_R11_LEFTOVERS) == r11_old, (
-        sorted(set(_R16_R11_LEFTOVERS) ^ r11_old)
-    )
-
-    # same discipline for the CLI subcommand ordinals' running total
-    with open(
-        os.path.join(here, "gis_etl_spark", "cli.py")
-    ) as f:
+    # same discipline for the CLI subcommand count
+    with open(os.path.join(here, "gis_etl_spark", "cli.py")) as f:
         n_sub = len(re.findall(r"sub\.add_parser\(", f.read()))
     with open(os.path.join(here, "COVERAGE.md")) as f:
-        cov0 = f.read()
-    subs = re.findall(r"cli subcommand count: (\d+)", cov0)
+        subs = re.findall(r"cli subcommand count: (\d+)", f.read())
     assert subs, "COVERAGE.md is missing the cli subcommand marker"
     assert all(int(n) == n_sub for n in subs), (subs, n_sub)
-    deferred = {q for q, r in latest.items() if r <= 12} - set(_R16_FRONT)
-    with open(os.path.join(here, "COVERAGE.md")) as f:
-        cov = f.read()
-    for marker, want in (
-        ("fronted r11 leftovers", len(_R16_R11_LEFTOVERS)),
-        ("r12 cohort fronted", len(_R16_R12_COHORT)),
-        ("r12 leftovers deferred", len(deferred)),
-    ):
-        got = re.findall(rf"{marker}: (\d+)", cov)
-        assert got, f"COVERAGE.md is missing the '{marker}: N' marker"
-        assert all(int(n) == want for n in got), (marker, got, want)
 
-    # r17: the same set-arithmetic discipline for the r17 rotation,
-    # census frozen at r16 (the state the r17 promise was made
-    # against), plus the STALENESS-FLOOR marker (VERDICT r16 item 5 —
-    # the "no query predates rN" sentence drifted off-by-one in r16
-    # prose; now `min(latest)` is a pinned literal too).
-    from gis_etl_spark.queries import (
-        _R17_FRONT,
-        _R17_R12_LEFTOVERS,
-        _R17_R13_COHORT,
-    )
 
-    latest16: dict[str, int] = {}
-    for f in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"_r(\d+)\.json$", f).group(1))
-        if rnd > 16:
-            continue
-        with open(f) as fh:
-            for q in json.load(fh):
-                latest16[q] = max(latest16.get(q, 0), rnd)
-    r12_old = {q for q, r in latest16.items() if r <= 12}
-    assert set(_R17_R12_LEFTOVERS) == r12_old, (
-        sorted(set(_R17_R12_LEFTOVERS) ^ r12_old)
-    )
-    deferred13 = {q for q, r in latest16.items() if r <= 13} - set(
-        _R17_FRONT
-    )
-    for marker, want in (
-        ("r12 leftovers fronted", len(_R17_R12_LEFTOVERS)),
-        ("r13 cohort fronted", len(_R17_R13_COHORT)),
-        ("r13 leftovers deferred", len(deferred13)),
-    ):
-        got = re.findall(rf"{marker}: (\d+)", cov)
-        assert got, f"COVERAGE.md is missing the '{marker}: N' marker"
-        assert all(int(n) == want for n in got), (marker, got, want)
-    floor = min(latest16.values())
-    got_floor = re.findall(r"staleness floor: r(\d+)", cov)
-    assert got_floor, "COVERAGE.md is missing the staleness-floor marker"
-    assert all(int(n) == floor for n in got_floor), (got_floor, floor)
+def test_gate_window_is_the_policy():
+    """The driver scores the first 50 registry entries; they must be
+    WINDOW, and WINDOW must be tools/rotate.py's policy applied to the
+    CORRECTNESS census frozen at WINDOW_CENSUS (so committing a newer
+    round's file does not turn this red)."""
+    import os
 
-    # r18: same set-arithmetic discipline for the r18 rotation, census
-    # frozen at r17 (the state the r18 promise was made against). An
-    # OPTIMIZATION round adds no queries, so the window is the 14
-    # promised r13 leftovers + every query whose physical plan the r18
-    # optimizations changed (re-pin precedent: _R17_PLAN_CHANGED) +
-    # the r14-cohort head; the post-rotation floor is pinned under its
-    # own marker name (the pre-r17 floor marker above stays frozen).
-    from gis_etl_spark.queries import (
-        _R18_FRONT,
-        _R18_PLAN_CHANGED,
-        _R18_R13_LEFTOVERS,
-        _R18_R14_COHORT,
-    )
+    from gis_etl_spark.queries import PLAN_CHANGED, WINDOW, WINDOW_CENSUS
+    from tools import rotate
 
-    latest17: dict[str, int] = {}
-    for f in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"_r(\d+)\.json$", f).group(1))
-        if rnd > 17:
-            continue
-        with open(f) as fh:
-            for q in json.load(fh):
-                latest17[q] = max(latest17.get(q, 0), rnd)
-    r13_old = {q for q, r in latest17.items() if r <= 13}
-    assert set(_R18_R13_LEFTOVERS) == r13_old, (
-        sorted(set(_R18_R13_LEFTOVERS) ^ r13_old)
+    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    assert list(REGISTRY)[:50] == list(WINDOW)
+    assert list(WINDOW) == rotate.window(
+        REGISTRY, rotate.census(here, WINDOW_CENSUS), PLAN_CHANGED
     )
-    deferred14 = {q for q, r in latest17.items() if r <= 14} - set(
-        _R18_FRONT
-    )
-    for marker, want in (
-        ("r13 leftovers fronted", len(_R18_R13_LEFTOVERS)),
-        ("r18 plan-changed fronted", len(_R18_PLAN_CHANGED)),
-        ("r14 cohort fronted", len(_R18_R14_COHORT)),
-        ("r14 leftovers deferred", len(deferred14)),
-    ):
-        got = re.findall(rf"{marker}: (\d+)", cov)
-        assert got, f"COVERAGE.md is missing the '{marker}: N' marker"
-        assert all(int(n) == want for n in got), (marker, got, want)
-    post18 = min(
-        r for q, r in latest17.items() if q not in set(_R18_FRONT)
-    )
-    got18 = re.findall(r"post-r18 floor: r(\d+)", cov)
-    assert got18, "COVERAGE.md is missing the post-r18 floor marker"
-    assert all(int(n) == post18 for n in got18), (got18, post18)
-
-    # r19: same discipline, census frozen at r18 (the state the r19
-    # promise was made against). Second OPTIMIZATION round — the
-    # window is the 30 promised r14 leftovers + this round's
-    # plan-changed re-pins + the r15-cohort head.
-    from gis_etl_spark.queries import (
-        _R19_FRONT,
-        _R19_PLAN_CHANGED,
-        _R19_R14_LEFTOVERS,
-        _R19_R15_COHORT,
-    )
-
-    latest18: dict[str, int] = {}
-    for f in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"_r(\d+)\.json$", f).group(1))
-        if rnd > 18:
-            continue
-        with open(f) as fh:
-            for q in json.load(fh):
-                latest18[q] = max(latest18.get(q, 0), rnd)
-    r14_old = {q for q, r in latest18.items() if r <= 14}
-    assert set(_R19_R14_LEFTOVERS) == r14_old, (
-        sorted(set(_R19_R14_LEFTOVERS) ^ r14_old)
-    )
-    deferred15 = {q for q, r in latest18.items() if r <= 15} - set(
-        _R19_FRONT
-    )
-    for marker, want in (
-        ("r14 leftovers fronted", len(_R19_R14_LEFTOVERS)),
-        ("r19 plan-changed fronted", len(_R19_PLAN_CHANGED)),
-        ("r15 cohort fronted", len(_R19_R15_COHORT)),
-        ("r15 leftovers deferred", len(deferred15)),
-    ):
-        got = re.findall(rf"{marker}: (\d+)", cov)
-        assert got, f"COVERAGE.md is missing the '{marker}: N' marker"
-        assert all(int(n) == want for n in got), (marker, got, want)
-    post19 = min(
-        r for q, r in latest18.items() if q not in set(_R19_FRONT)
-    )
-    got19 = re.findall(r"post-r19 floor: r(\d+)", cov)
-    assert got19, "COVERAGE.md is missing the post-r19 floor marker"
-    assert all(int(n) == post19 for n in got19), (got19, post19)
+    assert len(set(WINDOW)) == len(WINDOW) == 50
+    assert set(WINDOW) <= set(REGISTRY)
+    assert set(PLAN_CHANGED) <= set(WINDOW)
