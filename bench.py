@@ -49,6 +49,24 @@ XOVER_REPLICAS = 24
 # null). Every error surfaces in the artifacts line + local file.
 ERRORS: dict[str, str] = {}
 
+# every entry the noise gate re-measured: name → [first-pass wall,
+# re-measured wall] (the recorded timing is the min of the two). Goes
+# to the local record only; the stdout lines are unchanged.
+REMEASURED: dict[str, list[float]] = {}
+NOISE_GATE_FACTOR = 1.3
+
+
+def noise_gate_suspects(
+    timings: dict[str, float], prior: dict[str, float]
+) -> list[str]:
+    """Entries whose first-pass wall exceeds NOISE_GATE_FACTOR × their
+    prior-round record (entries with no positive prior never are)."""
+    return sorted(
+        k
+        for k, v in timings.items()
+        if prior.get(k, 0) > 0 and v > NOISE_GATE_FACTOR * prior[k]
+    )
+
 
 def _flush_partial(
     timings: dict[str, float], artifacts: dict[str, int], done: str
@@ -72,6 +90,7 @@ def _flush_partial(
                 "sf": _sf_from_dir(SF_DIR),
                 "artifacts": artifacts,
                 "errors": ERRORS,
+                "remeasured": REMEASURED,
                 "progress": done,
             },
             f,
@@ -1889,13 +1908,15 @@ def main() -> None:
 
     # noise gate: any entry >1.3x its prior-round record gets a second
     # measurement pass late in the run (headline queries individually,
-    # section benches as a section), and the per-entry MIN is recorded.
+    # section benches as a section), and the per-entry MIN is recorded;
+    # both walls of every re-measured entry go to REMEASURED.
     # (prior snapshot hoisted to main() start — see _prior_round_timings)
-    suspect = {
-        k
-        for k, v in timings.items()
-        if k in prior and prior[k] > 0 and v > 1.3 * prior[k]
-    }
+    suspect = set(noise_gate_suspects(timings, prior))
+
+    def remeasured(name: str, wall: float) -> None:
+        REMEASURED[name] = [timings[name], wall]
+        timings[name] = min(timings[name], wall)
+
     if suspect:
         print(f"# re-measuring {len(suspect)} noisy entries: "
               f"{sorted(suspect)}", file=sys.stderr)
@@ -1904,9 +1925,7 @@ def main() -> None:
                 builder, _ = REGISTRY[name]
                 t0 = time.time()
                 _materialize(builder(spark, SF_DIR))
-                timings[name] = min(
-                    timings[name], round(time.time() - t0, 3)
-                )
+                remeasured(name, round(time.time() - t0, 3))
             rerun_art: dict[str, int] = {}
             for sect_t, fn in (
                 (stream_t, _streaming_benches),
@@ -1916,7 +1935,7 @@ def main() -> None:
             ):
                 if suspect & set(sect_t):
                     for k, v in fn(spark, rerun_art).items():
-                        timings[k] = min(timings[k], v)
+                        remeasured(k, v)
             for k, v in rerun_art.items():
                 if k.endswith("_per_sec"):
                     artifacts[k] = max(artifacts.get(k, 0), v)
@@ -2017,7 +2036,11 @@ def main() -> None:
     )
     tmp_path = full_path + ".tmp"
     with open(tmp_path, "w") as f:
-        json.dump({**result, "artifacts": artifacts}, f, indent=1)
+        json.dump(
+            {**result, "artifacts": artifacts, "remeasured": REMEASURED},
+            f,
+            indent=1,
+        )
     os.replace(tmp_path, full_path)
     print(json.dumps({"artifacts": artifacts}, separators=(",", ":")))
     print(json.dumps(result, separators=(",", ":")))  # sacrificial full line

@@ -61,7 +61,7 @@ _STAGES = ("raw", "near_dedup", "quality", "pii_clean", "mixture_draw")
 
 def _eager_concurrently(thunks: list) -> list:
     """Run independent driver-side materializations (localCheckpoint /
-    eager fixpoints) as CONCURRENT Spark jobs from a small thread pool
+    eager CC labels) as CONCURRENT Spark jobs from a small thread pool
     (guide §2.6: actions are only sequential because driver code calls
     them sequentially — overlapping independent jobs lets one job's
     tasks back-fill executors idled by the other's tail). Thread-local
@@ -614,8 +614,8 @@ def increment_curation_flags(
             )
             .filter(F.col("jaccard") >= MINHASH_JACCARD_T)
             .select("doc_a", "doc_b")
-            # materialize the verified edge set before the fixpoint
-            # loop (the _verified_pair_edges discipline)
+            # materialize the verified edge set before
+            # label_components (the _verified_pair_edges discipline)
             .localCheckpoint()
         )
     member = label_components(intra_pairs).join(q, "doc_id")
@@ -848,7 +848,7 @@ def flags_increment_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality table, and component labels from the PERSISTED members
     table (both written once by build_dedup_snapshot and extended
     batch-sized on append) — the monitor never re-derives history's
-    pair graph, runs no component fixpoint, and never re-scans history
+    pair graph, runs no component labelling, and never re-scans history
     text. History is touched only by column-pruned scans of the
     bucketed snapshot tables; everything derived in-plan is
     increment-sized. Receipt: test_risk_monitor_serves_from_stored_
@@ -1218,7 +1218,7 @@ def rederive_risky_component_flags(
     bipartite pairs + qualities + component labels from
     build_dedup_snapshot's bucketed tables — and the re-derived
     subgraph (touched components' members + the increment's pair
-    endpoints) is affected-sized; its closure fixpoint runs over
+    endpoints) is affected-sized; its label_components runs over
     edges that number |detected pairs| + |intra pairs| + |touched
     members|, not the corpus. The ONE corpus touch is a broadcast
     semi-join projection of the affected base docs' (source, n, text

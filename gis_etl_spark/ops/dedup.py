@@ -23,8 +23,6 @@ At 100 TB the band tables are further bucketable by band_key.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -47,16 +45,13 @@ SIM_BANDS = 4
 SIM_BAND_BITS = SIM_BITS // SIM_BANDS  # 15
 MINHASH_JACCARD_T = 0.35
 
-# Connected-components driver fast path (r18): edge sets at or below
-# this size run the exact union-find on the driver (one bounded
-# collect, ~16 bytes/edge — ~2 MB at the default) instead of the
-# O(diameter) distributed fixpoint. The gate is a SIZE test, not a
+# Connected-components size gate: edge sets at or below this size run
+# the exact union-find on the driver (one bounded collect, ~16
+# bytes/edge — ~2 MB here); larger ones run distributed star
+# contraction (label_components). The gate is a SIZE test, not a
 # cluster test: affected-/increment-sized graphs stay under it at any
-# corpus scale, corpus-wide graphs exceed it and run distributed.
-# Broadcast-join-sized by design; override via env for tuning.
-LABEL_PROP_DRIVER_MAX_EDGES = int(
-    os.environ.get("SPARK_GRAFT_CC_DRIVER_EDGES", "131072")
-)
+# corpus scale, corpus-wide graphs exceed it. Broadcast-join-sized.
+LABEL_PROP_DRIVER_MAX_EDGES = 131072
 NGRAM_JACCARD_T = 0.3
 SIMHASH_MAX_HAMMING = 12
 
@@ -807,9 +802,9 @@ def _snapshot_member_labels(
     persists. Verified MinHash pairs are a pairwise property (band
     collision + exact Jaccard of the two shingle sets), so the snapshot
     subset's edges are exactly the full corpus's session-memoized edge
-    set (_verified_pair_edges) filtered to snapshot endpoints; the
-    fixpoint then runs over that filtered edge set once, AT BUILD TIME
-    — the whole point of storing the labels is that monitors and
+    set (_verified_pair_edges) filtered to snapshot endpoints;
+    label_components then runs over that filtered edge set once, AT
+    BUILD TIME — the whole point of storing the labels is that monitors and
     targeted re-derives never rerun it."""
     if scope == "incsplit":
         edges = _verified_pair_edges(spark, sf_dir, docs_path).filter(
@@ -819,7 +814,7 @@ def _snapshot_member_labels(
         labels = label_components(edges)
     else:
         # full scope: the snapshot side IS the whole corpus, so the
-        # labels are the session-memoized fixpoint result
+        # labels are the session-memoized label_components result
         labels = _component_labels(spark, sf_dir, docs_path)
     return _members_with_keepers(labels, quality)
 
@@ -1264,32 +1259,40 @@ def incremental_dedup_pairs_sql(src: str) -> str:
 
 
 def label_components(pairs: DataFrame) -> DataFrame:
-    """Connected components over an undirected pair graph — min-label
-    propagation iterated to FIXPOINT with a driver loop (the kmeans_fit
-    discipline): each iteration is one equi-join + partial/final
-    min-agg, lineage truncated per iteration via localCheckpoint so the
-    plan never grows; the loop exits on a changed-count of zero, so
-    the result is the exact transitive closure independent of the
-    iteration schedule. Shared by near-dup cluster assembly
-    (dedup_components) and spatial clustering (geo_spatial_clusters).
+    """Connected components over an undirected pair graph — the one CC
+    algorithm, shared by near-dup cluster assembly (dedup_components),
+    spatial clustering (geo_spatial_clusters) and the corpus flag
+    derivations.
 
-    Input: (doc_a, doc_b) pairs, one row per undirected edge.
+    Input: (doc_a, doc_b) pairs; duplicate, reversed and self-loop
+    rows are allowed.
     Output: (doc_id, component = min id reachable), one row per node
     that appears in any pair.
 
-    Small-graph fast path (r18, guide §1.2 step 1 — the distributed
-    algorithm first): the edge frame is materialized ONCE
-    (localCheckpoint) and counted; at or below
-    {LABEL_PROP_DRIVER_MAX_EDGES} edges (env
-    SPARK_GRAFT_CC_DRIVER_EDGES; ~2 MB of longs at the default) the
-    exact union-find runs on the driver — 3 bounded jobs total instead
-    of O(diameter) join+agg rounds — and the result comes back as a
-    local relation. This is the broadcast-join smallness test applied
-    to the fixpoint: increment/affected-sized graphs (the remediation,
-    intra-batch linkage, spatial clusters) stay under it at ANY corpus
-    scale by construction, while corpus-wide pair graphs exceed it and
-    take the distributed fixpoint unchanged. Both paths compute the
-    identical exact transitive closure (oracle-pinned)."""
+    The edge frame is materialized ONCE (localCheckpoint) and counted
+    against the size gate, LABEL_PROP_DRIVER_MAX_EDGES:
+    - at or below it, the exact union-find runs on the driver — one
+      bounded collect, 3 jobs in total — and the result comes back as
+      a local relation. This is the broadcast-join smallness test
+      applied to CC: increment/affected-sized graphs (the remediation,
+      intra-batch linkage, spatial clusters) stay under it at ANY
+      corpus scale by construction;
+    - above it, ALTERNATING STAR CONTRACTION (Kiveris, Lattanzi,
+      Mirrokni, Rastogi, Vassilvitskii 2014: "Connected Components in
+      MapReduce and Beyond"): large-star hangs every strictly-larger
+      neighbor off the minimum of its neighborhood, small-star re-hangs
+      the smaller ones, and the edge set contracts toward per-component
+      stars rooted at the minimum in O(log n) alternations regardless
+      of diameter — a long single-linkage chain costs a handful of
+      rounds, not one round per hop. Per round: two window-min passes
+      and one distinct, localCheckpointed (flat lineage). The loop
+      stops as soon as the edge set IS such a star forest, which the
+      same per-node pass that produces the labels tells: a graph that
+      starts settled (disjoint pairs, stars — shallow near-dup
+      clusters) runs no round at all.
+    Both paths compute the identical exact transitive closure
+    (oracle-pinned; tests/test_cdc_graph.py forces every graph through
+    both sides of the gate)."""
     spark = pairs.sparkSession
     undirected = pairs.select("doc_a", "doc_b").localCheckpoint()
     if (
@@ -1318,78 +1321,6 @@ def label_components(pairs: DataFrame) -> DataFrame:
             [(n, find(n)) for n in sorted(parent)],
             f"doc_id {dtype}, component {dtype}",
         )
-    pairs = undirected
-    # edges are pre-partitioned on the iteration's join key (doc_b)
-    # BEFORE the checkpoint: the localCheckpoint preserves the hash
-    # partitioning, so the per-iteration join re-shuffles only the
-    # labels side — the (static) edge frame never crosses the network
-    # again (guide §2.4: two operations keyed the same way share one
-    # exchange).
-    edges = (
-        pairs.select("doc_a", "doc_b")
-        .union(
-            pairs.select(
-                F.col("doc_b").alias("doc_a"),
-                F.col("doc_a").alias("doc_b"),
-            )
-        )
-        .repartition("doc_b")
-        .localCheckpoint()
-    )
-    labels = (
-        edges.select(F.col("doc_a").alias("doc_id")).distinct()
-        .withColumn("component", F.col("doc_id"))
-        .localCheckpoint()
-    )
-    # labels decrease monotonically per node, so the fixpoint test is
-    # 'label sum unchanged' — one cheap aggregate over the freshly
-    # checkpointed frame instead of the old self-join diff count
-    # (halves the per-iteration work; matters on deep single-linkage
-    # chains where the loop runs O(graph diameter) rounds)
-    total = labels.agg(F.sum("component")).collect()[0][0]
-    while True:
-        # one pass per iteration (r18, guide §2.3/§2.4): propagate
-        # each node's label across its edges and fold the node's own
-        # label back in through a UNION + min-agg — 2 exchanges
-        # (labels into the join, the groupBy) instead of the previous
-        # join + groupBy + second labels join (3). min(own ∪
-        # neighbors') is exactly the old least(component,
-        # coalesce(nbr_min)) — nodes with no surviving neighbor rows
-        # keep their label through the union arm.
-        prop = edges.join(
-            labels.withColumnRenamed("doc_id", "doc_b"), "doc_b"
-        ).select(F.col("doc_a").alias("doc_id"), "component")
-        labels = (
-            prop.unionByName(labels)
-            .groupBy("doc_id")
-            .agg(F.min("component").alias("component"))
-            .localCheckpoint()
-        )
-        new_total = labels.agg(F.sum("component")).collect()[0][0]
-        if new_total == total:
-            break
-        total = new_total
-    return labels
-
-
-_STAR_ROUNDS = {"last": 0}  # observability for tests/benchmarks
-
-
-def label_components_stars(pairs: DataFrame) -> DataFrame:
-    """Connected components by ALTERNATING STAR CONTRACTION (Kiveris,
-    Lattanzi, Mirrokni, Rastogi, Vassilvitskii 2014: "Connected
-    Components in MapReduce and Beyond", two-phase alternating
-    algorithm) — the long-chain answer to label_components' O(diameter)
-    rounds: large-star hangs every strictly-larger neighbor off the
-    minimum of each neighborhood, small-star re-hangs the smaller ones,
-    and the edge set contracts toward per-component stars in
-    O(log n) alternations regardless of diameter.
-
-    Per round: two groupBy-min + join passes over the edge frame, each
-    localCheckpointed (flat lineage); convergence = the canonical edge
-    set stopped changing (count + endpoint sums — exact, since star
-    contraction is monotone). Output schema matches label_components:
-    (doc_id, component = min id of the component)."""
 
     def canon(e: DataFrame) -> DataFrame:
         return e.select(
@@ -1402,71 +1333,73 @@ def label_components_stars(pairs: DataFrame) -> DataFrame:
         )
 
     def star(e: DataFrame, large: bool) -> DataFrame:
-        """One star operation over canonical edges e."""
-        d = both_dirs(e)
-        m = (
-            d.groupBy("u")
-            .agg(F.min("v").alias("nmin"))
-            .select(
-                "u", F.least(F.col("u"), F.col("nmin")).alias("m")
+        """One star operation over canonical edges e: every neighbor v
+        of u (larger ones for large-star, the others plus u itself for
+        small-star) is re-hung off m = min(u, neighbors of u), read
+        from a window on u (one exchange, no join back)."""
+        d = both_dirs(e).select(
+            "u",
+            "v",
+            F.least("u", F.min("v").over(Window.partitionBy("u"))).alias(
+                "m"
+            ),
+        )
+        if large:
+            # m < u < v: already canonical; duplicates are harmless to
+            # the small-star that follows, whose canon removes them
+            return d.filter(F.col("v") > F.col("u")).select(
+                F.col("m").alias("u"), "v"
+            )
+        # small-star: (u, m) for every u, and (v, m) for each v <= u,
+        # in one pass over d; canon drops the self-pairs and duplicates
+        low = F.when(F.col("v") <= F.col("u"), F.col("v")).otherwise(
+            F.col("u")
+        )
+        return canon(
+            d.select(
+                F.inline(
+                    F.array(
+                        F.struct("u", F.col("m").alias("v")),
+                        F.struct(low.alias("u"), F.col("m").alias("v")),
+                    )
+                )
             )
         )
-        dm = d.join(m, "u")
-        if large:
-            out = dm.filter(F.col("v") > F.col("u")).select(
-                F.col("v").alias("u"), F.col("m").alias("v")
-            )
-        else:
-            out = dm.filter(F.col("v") <= F.col("u")).select(
-                F.col("v").alias("u"), F.col("m").alias("v")
-            ).unionAll(m.select("u", F.col("m").alias("v")))
-        return canon(out)
 
+    # self-loop-only nodes: canon drops their edges, so their
+    # self-pairs are folded back in to give them a row
+    loops = undirected.filter(F.col("doc_a") == F.col("doc_b")).select(
+        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
+    )
     edges = canon(
-        pairs.select(
+        undirected.select(
             F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
         )
     ).localCheckpoint()
-
-    def fingerprint(e: DataFrame) -> tuple:
-        # (count, sum u, sum v) alone can collide across distinct edge
-        # sets (e.g. {(1,4),(2,3)} vs {(1,3),(2,4)}) and small-star can
-        # inject new edges mid-run, so the triple is not monotone; the
-        # order-independent sum of a 64-bit edge hash makes a collision
-        # that also matches count+sums astronomically unlikely, at the
-        # cost of one extra agg column in the same pass.
-        r = e.agg(
-            F.count("*"),
-            F.sum("u"),
-            F.sum("v"),
-            # decimal(38,0): full-range int64 hashes overflow a long
-            # sum under ANSI mode; decimal headroom covers 10^19 edges
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
-        ).collect()[0]
-        return (r[0], r[1], r[2], r[3])
-
-    fp = fingerprint(edges)
-    rounds = 0
     while True:
-        rounds += 1
-        edges = star(star(edges, large=True), large=False).localCheckpoint()
-        new_fp = fingerprint(edges)
-        if new_fp == fp:
-            break
-        fp = new_fp
-    _STAR_ROUNDS["last"] = rounds
-
-    # converged: edges are per-component stars rooted at the min id
-    d = both_dirs(edges)
-    labels = (
-        d.groupBy("u")
-        .agg(F.min("v").alias("nmin"))
-        .select(
-            F.col("u").alias("doc_id"),
-            F.least(F.col("u"), F.col("nmin")).alias("component"),
+        # per node: label = least(own id, neighbors). The edge set is
+        # settled — every component a star rooted at its minimum, so
+        # these labels are final — when no node has a smaller neighbor
+        # and any other neighbor.
+        below = (F.col("v") < F.col("u")).cast("int")
+        above = (F.col("v") > F.col("u")).cast("int")
+        nodes = (
+            both_dirs(edges)
+            .unionAll(loops)
+            .groupBy("u")
+            .agg(
+                F.least(F.col("u"), F.min("v")).alias("component"),
+                F.sum(below).alias("below"),
+                F.sum(above).alias("above"),
+            )
+            .localCheckpoint()
         )
-    )
-    return labels
+        unsettled = (F.col("below") > 1) | (
+            (F.col("below") == 1) & (F.col("above") > 0)
+        )
+        if nodes.filter(unsettled).isEmpty():
+            return nodes.select(F.col("u").alias("doc_id"), "component")
+        edges = star(star(edges, large=True), large=False).localCheckpoint()
 
 
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1475,19 +1408,15 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     actual dedup (keep one doc per component, not one per pair; pair
     lists double-count transitive duplicates A~B~C).
 
-    Spark shape: min-label propagation iterated to FIXPOINT with a
-    driver loop (the kmeans_fit discipline): each iteration is one
-    equi-join + partial/final min-agg, lineage truncated per iteration
-    via localCheckpoint so the plan never grows. Converges in
-    O(component diameter) iterations — near-dup clusters are shallow
-    (diameter ≤ a few), and the loop exits on a changed-count of zero,
-    so the result equals the exact transitive closure the oracle's
-    recursive CTE computes, independent of iteration schedule.
+    Spark shape: label_components — the driver union-find below its
+    size gate, distributed star contraction (O(log n) rounds, any
+    diameter) above it. Both compute the exact transitive closure the
+    oracle's recursive CTE computes.
 
     Output: one row per doc appearing in any pair — (doc_id,
     component = min doc_id of its cluster, n_members, is_kept)."""
     # same edge set as _verified_pair_edges (dedup_minhash_pairs
-    # modulo its ordering, which label propagation ignores) — serve
+    # modulo its ordering, which the component labels ignore) — serve
     # the labels from the session memo
     labels = _component_labels(spark, sf_dir)
     sizes = labels.groupBy("component").agg(
@@ -1529,13 +1458,13 @@ def _verified_pair_edges(
 def _component_labels(
     spark: SparkSession, sf_dir: str, docs_path: str | None = None
 ) -> DataFrame:
-    """(doc_id, component) over _verified_pair_edges, fixpoint run once
-    per session per corpus fingerprint: the label fixpoint runs ~3
-    Spark jobs per round, and five consumers (keeper policy,
-    cluster stats, component assembly, the funnel's flags, the corpus
-    writer) share it. label_components' result is already
-    localCheckpointed at loop exit. The stored snapshot's `members`
-    table is the durable, cross-process form of the same artifact."""
+    """(doc_id, component) over _verified_pair_edges, label_components
+    run once per session per corpus fingerprint: five consumers
+    (keeper policy, cluster stats, component assembly, the funnel's
+    flags, the corpus writer) share it. label_components' result is
+    already materialized (a local relation or a localCheckpoint). The
+    stored snapshot's `members` table is the durable, cross-process
+    form of the same artifact."""
     path = docs_path or ensure_documents_aug()
     return memo(
         spark,
@@ -1561,8 +1490,8 @@ def dedup_canonical_keepers(
     Output: one row per doc appearing in any verified near-dup pair —
     (doc_id, component, quality_score, keeper_id, is_kept), ordered.
 
-    Scale: component labels from the fixpoint min-label propagation;
-    quality is a map-side expression; the keeper argmax is ONE
+    Scale: component labels from label_components (driver union-find
+    below its size gate, star contraction above it); quality is a map-side expression; the keeper argmax is ONE
     groupBy(component) with max(struct(quality, -doc_id)) — map-side
     partial agg, the CDC max(struct) shape, no window over members —
     and the keeper table (|components| rows) joins back on component.
@@ -1715,7 +1644,7 @@ def dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     absent — the histogram describes the DUPLICATE mass; total corpus
     size lives in source_data_card.
 
-    Scale: components from the fixpoint propagation; then two
+    Scale: components from label_components; then two
     map-side-combined aggregations (component → size, size →
     histogram). Nothing touches text after the pair graph."""
     labels = _component_labels(spark, sf_dir)
@@ -1893,8 +1822,8 @@ def leakage_safe_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     (nonzero: the leaks the component scheme prevents). A straddling
     pair is attributed to its doc_a (min-id) side's split.
 
-    Scale: component labels come from the fixpoint min-label
-    propagation (one equi-join + partial agg per round); split
+    Scale: component labels come from label_components (driver
+    union-find below its size gate, star contraction above it); split
     assignment is a map-side md5 expression; the audits join the
     (tiny, already-shortlisted) verified pair set against the split
     map. Nothing here is heavier than the dedup pass that precedes it
@@ -1904,7 +1833,7 @@ def leakage_safe_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frames _verified_pair_edges/_component_labels memoize for the
     # keeper/cluster/funnel consumers (same _docs corpus, same chain,
     # already localCheckpointed) — re-deriving the MinHash chain and
-    # re-running the fixpoint per call was this query's whole wall
+    # re-running the components per call was this query's whole wall
     pairs = _verified_pair_edges(spark, sf_dir)
     comp = _component_labels(spark, sf_dir)
     n = LEAKAGE_N_SPLITS
@@ -1969,7 +1898,7 @@ def leakage_safe_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
 def leakage_safe_splits_sql(src: str) -> str:
     """SQL replay of leakage_safe_splits: the dedup_components
     recursive-CTE transitive closure (exact, schedule-independent —
-    the fixpoint twin's proven oracle form) + the same md5-derived
+    the component twin's proven oracle form) + the same md5-derived
     split buckets and pair audits."""
     n = LEAKAGE_N_SPLITS
     return f"""
@@ -2229,7 +2158,7 @@ def oracle_sqls() -> dict[str, str]:
         "incremental_dedup_pairs": incremental_dedup_pairs_sql(d),
         "leakage_safe_splits": leakage_safe_splits_sql(d),
         # exact transitive closure over the same pair graph — equals
-        # Spark's fixpoint-converged min-label propagation
+        # Spark's label_components
         "dedup_components": f"""
             WITH RECURSIVE
             p AS (SELECT doc_a, doc_b FROM ({minhash_common}) mh),
@@ -2391,7 +2320,11 @@ def training_data_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: stages 1-2 are one shuffle each; stage 3 is the LSH chain
     (O(docs × bands)); the audit is a broadcast-sized rollup."""
-    from gis_etl_spark.ops.text import STOPWORDS, words_col
+    from gis_etl_spark.ops.text import (
+        STOPWORDS,
+        quality_score_from_counts,
+        words_col,
+    )
 
     docs = _docs(spark)
     w = words_col(F.col("text"))
@@ -2410,12 +2343,7 @@ def training_data_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan twice — flags + LSH survivor side — instead of five times).
     flagged = staged.withColumn(
         "q_ok",
-        F.round(
-            F.least(F.col("n") / F.lit(100.0), F.lit(1.0))
-            * (F.col("nd") / F.col("n"))
-            * (1.0 - F.col("nstop") / F.col("n")),
-            4,
-        )
+        quality_score_from_counts(F.col("n"), F.col("nd"), F.col("nstop"))
         >= PREP_QUALITY_T,
     )
     # exact keep: min doc_id among QUALITY rows of the same content
@@ -2460,7 +2388,11 @@ def training_data_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def training_data_prep_sql() -> str:
-    from gis_etl_spark.ops.text import STOPWORDS, WORDS_SQL
+    from gis_etl_spark.ops.text import (
+        STOPWORDS,
+        WORDS_SQL,
+        quality_score_sql,
+    )
 
     path = ensure_documents_aug()
     d = f"read_parquet('{path}')"
@@ -2475,8 +2407,7 @@ def training_data_prep_sql() -> str:
           FROM {d}
         ), quality AS (
           SELECT doc_id, lang, text FROM s
-          WHERE round(least(n / 100.0, 1.0) * (nd * 1.0 / n)
-                      * (1.0 - nstop * 1.0 / n), 4) >= {PREP_QUALITY_T}
+          WHERE {quality_score_sql()} >= {PREP_QUALITY_T}
         ), exact AS (
           SELECT doc_id, lang, text FROM (
             SELECT *, min(doc_id) OVER (PARTITION BY md5(text)) AS keep_id

@@ -638,9 +638,9 @@ def geo_spatial_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-neighbors gate would be one degree filter on the same edges)
     [beyond-reference: the reference detects nothing spatial beyond
     per-file counts]. Edges come from the verified grid-bucketed
-    near-pair join; components from the shared min-label fixpoint
-    (ops.dedup.label_components — one equi-join + min-agg per
-    iteration, lineage truncated, exact transitive closure). The
+    near-pair join; components from the shared
+    ops.dedup.label_components (driver union-find below its size gate,
+    star contraction above it; exact transitive closure). The
     oracle recomputes the closure with a recursive CTE over the golden
     centroid table.
 

@@ -2,14 +2,15 @@
 EXACT int64 arithmetic.
 
 The reference engine has no graph surface (SURVEY §2); the engine
-already ships one iterative graph algorithm — min-label propagation for
-duplicate clusters (ops/dedup.py) — and this adds the other canonical
-one. PageRank here is the canonical Spark ITERATIVE-algorithm shape
-done right: each iteration is a join + one partial-aggregated groupBy
-(never a collect, never a cross join), the rank vector stays
-distributed, and the iteration count is fixed so the lazy plan is
-bounded (at deeper iteration counts, checkpoint the rank frame each ~5
-rounds to truncate lineage — same note as the dedup fixpoint loop).
+already ships one iterative graph algorithm — connected components by
+star contraction for duplicate clusters (ops/dedup.py label_components)
+— and this adds the other canonical one. PageRank here is the
+canonical Spark ITERATIVE-algorithm shape done right: each iteration
+is a join + one partial-aggregated groupBy (never a collect, never a
+cross join), the rank vector stays distributed, and the iteration
+count is fixed so the lazy plan is bounded (at deeper iteration
+counts, checkpoint the rank frame each ~5 rounds to truncate lineage
+— the dedup star-contraction loop checkpoints every round).
 
 Exactness contract (what makes the oracle a hash-match, not an
 approximation): ranks are int64 fixed-point units summing to ~PR_SCALE.

@@ -29,6 +29,7 @@ from gis_etl_spark.io import (
     read_table_spread,
     table_path,
 )
+from gis_etl_spark.ops.fixedpoint import fxq, fxq_sql
 
 # small marker-word sets per language; with the driver's synthetic
 # shared-vocabulary corpus these exercise the operator (argmax over
@@ -46,18 +47,32 @@ STOPWORDS = ("the", "a", "of", "and", "to")
 def quality_score_from_counts(
     n: Column, nd: Column, nstop: Column
 ) -> Column:
-    """THE quality composite — round(least(n/100,1)·(nd/n)·(1−nstop/n),
-    4) over (token count, distinct tokens, stopword tokens). Single
-    shared expression: text_quality_scores, the dedup keeper policy,
-    the corpus funnel, and the streaming ingest twin must all gate on
-    byte-identical scores (hash-contract requirement), so none of them
-    may restate it."""
-    return F.round(
-        F.least(n / F.lit(100.0), F.lit(1.0))
-        * (nd / n)
-        * (1.0 - nstop / n),
-        4,
+    """THE quality composite — least(n/100,1)·(nd/n)·(1−nstop/n) over
+    (token count, distinct tokens, stopword tokens), quantized half-up
+    to 4 dp the ops/fixedpoint way (floor(v·1e4 + 0.5) / 1e4). Not
+    round(v, 4): Spark rounds the shortest decimal form
+    (BigDecimal.valueOf) half-up, while DuckDB rounds the scaled binary
+    product v·1e4, which can land exactly on .5 — so a score such as
+    0.22874999999999998 (64 words, 24 distinct, 3 stopwords) came out
+    0.2287 in Spark vs 0.2288 in DuckDB.
+    Single shared expression: text_quality_scores, the dedup keeper
+    policy, the corpus funnel, and the streaming ingest twin must all
+    gate on byte-identical scores (hash-contract requirement), so none
+    of them may restate it; quality_score_sql is its oracle twin."""
+    v = F.least(n / F.lit(100.0), F.lit(1.0)) * (nd / n) * (1.0 - nstop / n)
+    return fxq(v, 4) / F.lit(1e4)
+
+
+def quality_score_sql(
+    n: str = "n", nd: str = "nd", nstop: str = "nstop"
+) -> str:
+    """DuckDB twin of quality_score_from_counts over SQL count
+    expressions — token-for-token the same IEEE arithmetic."""
+    v = (
+        f"least({n} / 100.0, 1.0) * ({nd} * 1.0 / {n})"
+        f" * (1.0 - {nstop} * 1.0 / {n})"
     )
+    return f"({fxq_sql(v, 4)} / 1e4)"
 
 
 def h60(col: Column) -> Column:
@@ -228,11 +243,8 @@ def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.round(F.col("nstop") / F.col("n"), 4).alias("stopword_ratio"),
         F.round(F.col("nd") / F.col("n"), 4).alias("diversity"),
-        F.round(
-            F.least(F.col("n") / F.lit(100.0), F.lit(1.0))
-            * (F.col("nd") / F.col("n"))
-            * (1.0 - F.col("nstop") / F.col("n")),
-            4,
+        quality_score_from_counts(
+            F.col("n"), F.col("nd"), F.col("nstop")
         ).alias("quality_score"),
     )
 
@@ -251,9 +263,7 @@ def quality_score_cte_sql(src: str = "documents") -> str:
                    len(list_filter({w}, x -> x IN ({stop_list}))) AS nstop
             FROM {src}
           )
-          SELECT doc_id,
-                 round(least(n / 100.0, 1.0) * (nd * 1.0 / n)
-                       * (1.0 - nstop * 1.0 / n), 4) AS quality_score
+          SELECT doc_id, {quality_score_sql()} AS quality_score
           FROM s
         )"""
 
@@ -348,9 +358,7 @@ def quality_deciles_sql() -> str:
                  len(list_filter({w}, x -> x IN ({stop_list}))) AS nstop
           FROM documents
         ), q AS (
-          SELECT doc_id,
-                 round(least(n / 100.0, 1.0) * (nd * 1.0 / n)
-                       * (1.0 - nstop * 1.0 / n), 4) AS quality_score
+          SELECT doc_id, {quality_score_sql()} AS quality_score
           FROM s
         ), d AS (
           SELECT doc_id, quality_score,
@@ -2322,8 +2330,7 @@ def oracle_sqls() -> dict[str, str]:
             SELECT doc_id,
                    round(nstop * 1.0 / n, 4) AS stopword_ratio,
                    round(nd * 1.0 / n, 4) AS diversity,
-                   round(least(n / 100.0, 1.0) * (nd * 1.0 / n)
-                         * (1.0 - nstop * 1.0 / n), 4) AS quality_score
+                   {quality_score_sql()} AS quality_score
             FROM s
         """,
         "lang_id": f"""
@@ -4283,13 +4290,7 @@ def source_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.array_distinct(w)).alias("nd"),
         F.size(F.filter(w, lambda x: x.isin(*STOPWORDS))).alias("nstop"),
     ).withColumn(
-        "q",
-        F.round(
-            F.least(F.col("n") / F.lit(100.0), F.lit(1.0))
-            * (F.col("nd") / F.col("n"))
-            * (1.0 - F.col("nstop") / F.col("n")),
-            4,
-        ),
+        "q", quality_score_from_counts(F.col("n"), F.col("nd"), F.col("nstop"))
     )
     dup = (
         per.groupBy("fph")
@@ -4338,10 +4339,7 @@ def source_data_card_sql() -> str:
             FROM documents WHERE text IS NOT NULL
           )
         ), q AS (
-          SELECT source, lang, fph, n,
-                 round(least(n / 100.0, 1.0)
-                       * (nd * 1.0 / n)
-                       * (1.0 - nstop * 1.0 / n), 4) AS q
+          SELECT source, lang, fph, n, {quality_score_sql()} AS q
           FROM per
         ), dup AS (
           SELECT fph, count(*) >= 2 AS is_dup FROM q GROUP BY fph

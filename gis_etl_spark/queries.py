@@ -537,7 +537,7 @@ REGISTRY.update(
         "geo_haversine_span": (
             G.geo_haversine_span, _GEO_SQLS["geo_haversine_span"],
         ),
-        # single-linkage spatial clustering: shared min-label fixpoint
+        # single-linkage spatial clustering: shared label_components
         # vs the oracle's recursive-CTE transitive closure
         "geo_spatial_clusters": (
             G.geo_spatial_clusters, _GEO_SQLS["geo_spatial_clusters"],
@@ -847,8 +847,8 @@ REGISTRY.update(
         "leakage_safe_splits": (
             D.leakage_safe_splits, _DEDUP_SQLS["leakage_safe_splits"],
         ),
-        # pair graph → duplicate clusters (fixpoint label propagation
-        # vs the oracle's recursive-CTE transitive closure)
+        # pair graph → duplicate clusters (label_components vs the
+        # oracle's recursive-CTE transitive closure)
         "dedup_components": (
             D.dedup_components, _DEDUP_SQLS["dedup_components"],
         ),

@@ -77,8 +77,6 @@ _SLOW_RECEIPTS = {
     "test_no_singlepartition_window_in_any_registry_plan",
     "test_no_cartesian_product_in_any_registry_plan",
     # heavy composition / equality receipts
-    "test_label_components_driver_path_equals_distributed",
-    "test_star_contraction_equals_fixpoint_and_beats_diameter",
     "test_apply_rederive_patches_table_to_full_equality",
     "test_shared_frames_equal_probe_paths",
     "test_incremental_flags_append_matches_full_rebuild",

@@ -120,97 +120,73 @@ def test_spatial_clusters_match_union_find(spark, sf_dir):
     assert len(got) > 20
 
 
-def test_star_contraction_equals_fixpoint_and_beats_diameter(spark, sf_dir):
-    """Star-contraction CC must label identically to the min-label
-    fixpoint on (a) the real spatial proximity graph, (b) random
-    graphs, and (c) a 120-node PATH — where the fixpoint needs
-    O(diameter) rounds but star contraction stays logarithmic (round
-    count pinned)."""
-    import numpy as np
+def test_label_components_both_paths_equal_closure(spark, sf_dir, monkeypatch):
+    """label_components runs the driver union-find at or below
+    LABEL_PROP_DRIVER_MAX_EDGES and distributed star contraction above
+    it. Every graph is forced through both sides of the gate and both
+    results must equal the brute-force closure: one row per node that
+    appears in any pair (self-loop-only nodes included), component =
+    min id reachable.
 
-    from gis_etl_spark.ops.dedup import (
-        _STAR_ROUNDS,
-        label_components,
-        label_components_stars,
-    )
-    from gis_etl_spark.ops.joins import spatial_near_pairs
-
-    def labels_of(df):
-        return {(r.doc_id, r.component) for r in df.collect()}
-
-    spatial = spatial_near_pairs(spark, sf_dir).select(
-        F.col("a_id").alias("doc_a"), F.col("b_id").alias("doc_b")
-    )
-    assert labels_of(label_components_stars(spatial)) == labels_of(
-        label_components(spatial)
-    )
-
-    rng = np.random.default_rng(9)
-    rand_pairs = [
-        (int(a), int(b))
-        for a, b in zip(
-            rng.integers(0, 80, 150), rng.integers(0, 80, 150)
-        )
-        if a != b
-    ]
-    rdf = spark.createDataFrame(rand_pairs, "doc_a long, doc_b long")
-    assert labels_of(label_components_stars(rdf)) == labels_of(
-        label_components(rdf)
-    )
-
-    path = spark.createDataFrame(
-        [(i, i + 1) for i in range(120)], "doc_a long, doc_b long"
-    )
-    got = labels_of(label_components_stars(path))
-    assert got == {(i, 0) for i in range(121)}
-    assert _STAR_ROUNDS["last"] <= 12, _STAR_ROUNDS["last"]
-
-
-def test_label_components_driver_path_equals_distributed(
-    spark, sf_dir, monkeypatch
-):
-    """r18: label_components gained a size-gated driver union-find
-    fast path (one bounded collect) below LABEL_PROP_DRIVER_MAX_EDGES;
-    above the gate the distributed min-label fixpoint runs unchanged.
-    Both paths must produce the identical exact closure on star,
-    chain, random, and empty graphs — forced through each path via
-    the gate."""
+    Round bound: on the 60-node chain the distributed path runs 51
+    Spark jobs (local[4]); the min-label fixpoint it replaced needed
+    one round per hop and ran 430 (857 on a 121-node chain), so the
+    pin below catches a regression to O(diameter) rounds."""
     import numpy as np
 
     from gis_etl_spark.ops import dedup as D
+    from gis_etl_spark.ops.joins import spatial_near_pairs
 
-    def labels_of(df):
-        return {(r.doc_id, r.component) for r in df.collect()}
+    def closure(edges):
+        comp = {}
+        for a, b in edges:
+            merged = comp.get(a, {a}) | comp.get(b, {b})
+            for n in merged:
+                comp[n] = merged
+        return {(n, min(s)) for n, s in comp.items()}
 
     rng = np.random.default_rng(17)
-    graphs = [
-        [(i, i + 1) for i in range(60)],  # chain: diameter 60
-        [(0, i) for i in range(1, 20)] + [(100, 101)],  # star + pair
-        [
+    graphs = {
+        "chain": [(i, i + 1) for i in range(59)],
+        "star+pair": [(0, i) for i in range(1, 20)] + [(100, 101)],
+        "random": [
             (int(a), int(b))
             for a, b in zip(
                 rng.integers(0, 50, 120), rng.integers(0, 50, 120)
             )
             if a != b
         ],
-        [],  # empty edge set
-    ]
-    for edges in graphs:
-        df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        monkeypatch.setattr(D, "LABEL_PROP_DRIVER_MAX_EDGES", 10**6)
-        via_driver = labels_of(D.label_components(df))
-        monkeypatch.setattr(D, "LABEL_PROP_DRIVER_MAX_EDGES", 0)
-        via_distributed = labels_of(D.label_components(df))
-        assert via_driver == via_distributed, edges[:5]
-        # and both equal the brute-force closure
-        comp = {}
-        for a, b in edges:
-            ca, cb = comp.get(a, {a}), comp.get(b, {b})
-            merged = ca | cb
-            for n in merged:
-                comp[n] = merged
-        want = {(n, min(s)) for n, s in comp.items()}
-        assert via_driver == want
+        "empty": [],
+        "self-loops+dups": [(5, 5), (1, 2), (2, 2), (1, 2), (7, 8), (8, 7)],
+        "spatial": [
+            (r.a_id, r.b_id)
+            for r in spatial_near_pairs(spark, sf_dir).collect()
+        ],
+    }
+    sc = spark.sparkContext
+    chain_jobs = None
+    try:
+        for name, edges in graphs.items():
+            df = spark.createDataFrame(edges, "doc_a long, doc_b long")
+            want = closure(edges)
+            for gate in (10**6, 0):
+                monkeypatch.setattr(D, "LABEL_PROP_DRIVER_MAX_EDGES", gate)
+                group = f"cc-{name}-{gate}"
+                sc.setJobGroup(group, group)
+                got = {
+                    (r.doc_id, r.component)
+                    for r in D.label_components(df).collect()
+                }
+                assert got == want, (name, gate)
+                if group == "cc-chain-0":
+                    # read now, before later graphs' jobs can evict
+                    # the chain's from the status tracker
+                    chain_jobs = len(
+                        sc.statusTracker().getJobIdsForGroup(group)
+                    )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert chain_jobs <= 120, chain_jobs
 
 
 def test_triangle_census_matches_brute_force(spark):

@@ -219,6 +219,27 @@ def test_bench_prior_names_are_the_driver_line_only(tmp_path, monkeypatch):
     assert sorted(prior_names) == ["a", "b"]
 
 
+def test_bench_noise_gate_suspects_and_record(tmp_path, monkeypatch):
+    """The noise gate re-measures only entries above 1.3x a positive
+    prior, and every re-measured entry lands in the local record with
+    its first-pass and re-measured wall."""
+    import json
+
+    import bench
+
+    timings = {"up": 2.7, "edge": 1.3, "flat": 1.0, "new": 5.0, "zero": 4.0}
+    prior = {"up": 2.0, "edge": 1.0, "flat": 1.0, "zero": 0.0}
+    assert bench.noise_gate_suspects(timings, prior) == ["up"]
+    assert bench.noise_gate_suspects(timings, {}) == []
+
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    monkeypatch.setattr(bench, "REMEASURED", {"up": [2.7, 2.1]})
+    bench._flush_partial({"up": 2.1}, {}, "noise_gate")
+    rec = json.loads((tmp_path / "BENCH_local_latest.json").read_text())
+    assert rec["remeasured"] == {"up": [2.7, 2.1]}
+    assert rec["queries"] == {"up": 2.1}
+
+
 def test_cli_incremental_dedup_and_hard_negatives(tmp_path):
     """The r12 subcommands end-to-end in subprocesses; outputs carry
     the contract columns and plausible row counts."""

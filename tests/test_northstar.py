@@ -273,6 +273,37 @@ def test_quality_scores_bounded(spark, sf_dir):
         assert 0.0 <= r.quality_score <= 1.0
 
 
+def test_quality_score_half_boundary_matches_duckdb(spark, tmp_path):
+    """A doc of 64 words, 24 distinct, 3 stopwords scores
+    0.64 · 0.375 · 0.953125 = 0.22874999999999998 in IEEE doubles.
+    round(x, 4) gives 0.2287 in Spark (it rounds the shortest decimal
+    form, BigDecimal.valueOf, half-up) and 0.2288 in DuckDB (the IEEE
+    product x·1e4 rounds to exactly 2287.5); the composite's half-up
+    quantize must give 0.2288 on both engines."""
+    import duckdb
+
+    others = [f"w{i}" for i in range(23)]
+    words = ["the"] * 3 + others * 2 + others[:15]
+    assert (len(words), len(set(words))) == (64, 24)
+    docs_dir = tmp_path / "sf"
+    spark.createDataFrame(
+        [(1, " ".join(words))], "doc_id long, text string"
+    ).coalesce(1).write.parquet(str(docs_dir / "documents.parquet"))
+    got = T.text_quality_scores(spark, str(docs_dir)).collect()
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"'{docs_dir}/documents.parquet/*.parquet'"
+    )
+    want = con.execute(
+        "SELECT quality_score FROM "
+        f"({T.oracle_sqls()['text_quality_scores']})"
+    ).fetchall()
+    con.close()
+    assert [r.quality_score for r in got] == [0.2288]
+    assert [r[0] for r in want] == [0.2288]
+
+
 def test_lang_id_deterministic_argmax(spark, sf_dir):
     rows = T.lang_id(spark, sf_dir).collect()
     assert rows

@@ -1084,6 +1084,7 @@ def test_streaming_ingest_curation_matches_batch(spark, sf_dir, tmp_path):
         _PII_REDACTIONS,
         STOPWORDS,
         pii_planted_txt,
+        quality_score_from_counts,
         words_col,
     )
 
@@ -1120,11 +1121,10 @@ def test_streaming_ingest_curation_matches_batch(spark, sf_dir, tmp_path):
     for pat in _PII_PATTERNS.values():
         hits = hits + F.regexp_count(txt, F.lit(pat))
     n = F.size(w).cast("long")
-    q = F.round(
-        F.least(n / F.lit(100.0), F.lit(1.0))
-        * (F.size(F.array_distinct(w)) / n)
-        * (1.0 - F.size(F.filter(w, lambda x: x.isin(*STOPWORDS))) / n),
-        4,
+    q = quality_score_from_counts(
+        n,
+        F.size(F.array_distinct(w)),
+        F.size(F.filter(w, lambda x: x.isin(*STOPWORDS))),
     )
     want = {
         r["content_hash"]: tuple(r)[1:]

@@ -5,7 +5,8 @@ Usage:
 
 Writes plans/<tag>/<query>_<suffix>.txt (suffix from $PLAN_SUFFIX,
 default 'before') plus a one-line-per-query summary (Exchange count,
-join strategies, Python eval nodes, pushed filters) to stdout — the
+join strategies, Python eval nodes, WholeStageCodegen stages, pushed
+filters) to stdout — the
 optimization-round receipt artifact (plans/r18/*_before.txt /
 *_after.txt) the judge checks plan claims against.
 
@@ -65,6 +66,7 @@ def main() -> None:
             f"SHJ={plan.count('ShuffledHashJoin')} "
             f"PyEval={plan.count('EvalPython') + plan.count('MapInPandas') + plan.count('MapInArrow')} "
             f"Window={plan.count('Window')} "
+            f"WSCG={plan.count('WholeStageCodegen')} "
             f"pushed={len(pushed)}"
         )
     spark.stop()
